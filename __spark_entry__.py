@@ -662,7 +662,7 @@ def q_ivf_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF layout parse over the committed deterministic PDF table
     (data/pdfs.parquet): single-pass JVM admission gate (size + %PDF-
-    magic) -> one mapInPandas running the pure content-stream parser
+    magic) -> one mapInArrow running the pure content-stream parser
     (core/pdfparse.py).  Span sequences are pinned by spans_md5 (md5 of
     the kind/text/media_ref stream); oracle = golden parquet whose rows
     come from synth_pdf's construction-time expectations, independent of
@@ -862,7 +862,7 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate strip (Arc90-readability-style text/link-density
     scoring, core/boilerplate.py) over the committed deterministic page
-    table: single-pass JVM size gate -> one mapInPandas.  Content text
+    table: single-pass JVM size gate -> one mapInArrow.  Content text
     is pinned by content_md5; oracle = golden parquet built from
     synth_boiler_page's construction-time expectations, independent of
     the stripper (scratch/gen_golden_boiler.py, re-derived in

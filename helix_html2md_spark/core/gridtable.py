@@ -361,8 +361,10 @@ def layout_rows(table_node, render_cell):
             if is_header:
                 header_rows = len(rows)
     # occupancy grid, keyed (row << _OCC_SHIFT) | col — int keys hash
-    # cheaper than tuples, and a 2**32-column table cannot physically
-    # exist under the html size gate
+    # cheaper than tuples.  A column index reaching 1 << _OCC_SHIFT
+    # would alias the next row's keys; the 1 MB html gate keeps tables
+    # far below that, but the gate is configurable, so it is checked
+    max_cols = 1 << _OCC_SHIFT
     occupied: dict[int, _Cell] = {}
     cells: list[_Cell] = []
     ncols = 0
@@ -373,6 +375,10 @@ def layout_rows(table_node, render_cell):
             while base | ci in occupied:
                 ci += 1
             cell = _Cell(cn, None, ri, ci, in_header)
+            if ci + cell.colspan > max_cols:
+                raise ValueError(
+                    f"grid table wider than {max_cols} columns"
+                )
             # a rowSpan reaching past the last table row is sloppy but
             # common HTML; clamp to the rows that exist or the height
             # distribution indexes past `heights` (and the occupancy

@@ -80,17 +80,8 @@ def _is_media_shaped(url: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _walk_images(nodes):
-    for n in nodes:
-        if isinstance(n, dict):
-            if n["type"] == "image":
-                yield n
-            if "children" in n:
-                yield from _walk_images(n["children"])
-
-
 def _count_images(nodes) -> int:
-    """len(list(_walk_images(nodes))) without the generator frames."""
+    """Number of ``image`` nodes in the mdast forest ``nodes``."""
     count = 0
     stack = [nodes]
     pop = stack.pop

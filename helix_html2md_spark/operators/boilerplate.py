@@ -3,21 +3,21 @@
 Wraps core/boilerplate.strip_boilerplate (Arc90-readability-style
 text/link-density scoring) in the same Spark shape as the HTML and PDF
 extraction operators: a single-pass JVM admission gate below one
-Arrow-batched mapInPandas, with per-row error capture.
+Arrow-batched mapInArrow (``gate.map_rows``), with per-row error capture.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
 from ..core.boilerplate import strip_boilerplate
-from .gate import apply_gate, gate_errors
+from .gate import apply_gate, map_rows
 
 BOILER_SCHEMA = StructType(
     [
@@ -34,40 +34,31 @@ BOILER_SCHEMA = StructType(
 )
 
 
-def _strip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k.name: [] for k in BOILER_SCHEMA.fields}
-        gate_errs = gate_errors(pdf)
-        for rownum, (doc_id, html) in enumerate(
-            zip(pdf["doc_id"], pdf["html"])
-        ):
-            gate_err = gate_errs[rownum]
-            if gate_err is not None:
-                row = {
-                    "status": "constraint_error", "error": gate_err,
-                    "content_tag": None, "content_text": "",
-                    "text_len": 0, "link_density": 0.0, "n_paras": 0,
-                    "score": 0,
-                }
-            else:
-                try:
-                    row = strip_boilerplate(html or "")
-                    row["error"] = ""
-                except Exception as e:  # noqa: BLE001 - row resilience
-                    row = {
-                        "status": "parse_error",
-                        "error": f"{type(e).__name__}: {e}",
-                        "content_tag": None, "content_text": "",
-                        "text_len": 0, "link_density": 0.0, "n_paras": 0,
-                        "score": 0,
-                    }
-            out["doc_id"].append(doc_id)
-            for k in (
-                "status", "error", "content_tag", "content_text",
-                "text_len", "link_density", "n_paras", "score",
-            ):
-                out[k].append(row[k])
-        yield pd.DataFrame(out)
+def _failed(status: str, error: str) -> dict:
+    return {
+        "status": status, "error": error,
+        "content_tag": None, "content_text": "",
+        "text_len": 0, "link_density": 0.0, "n_paras": 0, "score": 0,
+    }
+
+
+def _strip_one(row: dict) -> dict:
+    try:
+        out = strip_boilerplate(row["html"] or "")
+    except Exception as e:  # noqa: BLE001 - row resilience
+        return _failed("parse_error", f"{type(e).__name__}: {e}")
+    out["error"] = ""
+    return out
+
+
+def _gated(message: str) -> dict:
+    return _failed("constraint_error", message)
+
+
+def _strip_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    return map_rows(batches, _strip_one, BOILER_SCHEMA, _gated)
 
 
 def strip_boilerplate_documents(
@@ -79,7 +70,7 @@ def strip_boilerplate_documents(
     """Strip boilerplate from a (doc_id, html) table.
 
     Single-pass JVM size gate (oversized html is blanked before the
-    Arrow crossing) -> one mapInPandas.
+    Arrow crossing) -> one mapInArrow.
     """
     # octet_length: the budget bounds Python-worker/Arrow batch MEMORY,
     # so it is a byte limit (F.length counts characters — a multibyte
@@ -99,4 +90,4 @@ def strip_boilerplate_documents(
     )
     if num_partitions:
         gated = gated.repartition(num_partitions, "doc_id")
-    return gated.mapInPandas(_strip_batches, BOILER_SCHEMA)
+    return gated.mapInArrow(_strip_batches, BOILER_SCHEMA)

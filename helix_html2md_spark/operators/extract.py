@@ -3,14 +3,16 @@
 Spark-first design (SURVEY.md §3.4):
 
 * admission gating (``maxHTMLSize``) runs JVM-side *before* the Python
-  stage, as a native filter over ``aggregate(spans, sum(length))`` —
+  stage, as a native ``_gate_error`` column over the assembled length —
   Catalyst cannot push predicates through an opaque UDF, so we order it
   explicitly (reference size gate: /root/reference/src/index.js:159-166)
 * skew defusal: explicit weight-class repartition — giant documents are
   round-robined across partitions deterministically (north_rule:
   "explicitly salted/repartitioned doc_id ranges")
-* one ``mapInPandas`` crossing per Arrow batch runs the pure-Python
-  transform (helix_html2md_spark.core) — no per-row Python
+* one ``mapInArrow`` crossing per Arrow batch runs the pure-Python
+  transform (helix_html2md_spark.core) through ``gate.map_rows`` — no
+  per-row Python UDF, no pandas conversion, and the output batch is
+  built on ``EXTRACTED_SCHEMA``'s Arrow form
 * per-row error capture into ``status``/``error`` columns instead of
   HTTP statuses (reference taxonomy: src/index.js:242-254)
 """
@@ -20,7 +22,7 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
@@ -31,7 +33,7 @@ from ..core.html2md import (
     resolve_url,
 )
 from ..core.transform import ConstraintsError
-from .gate import apply_gate, gate_errors
+from .gate import apply_gate, map_rows
 
 SPAN_TYPE = StructType(
     [
@@ -127,13 +129,9 @@ def decompose_md(md: str):
     ]
 
 
-def _scalar(v):
-    """NaN/None-safe scalar from a pandas row value."""
-    if v is None:
-        return None
-    if isinstance(v, float) and v != v:  # NaN
-        return None
-    return v
+def _failed(status: str, error: str) -> dict:
+    """extract_row's result for a document that did not convert."""
+    return dict(md="", status=status, error=error, spans=[])
 
 
 def extract_row(html, media_spans, cfg_row) -> dict:
@@ -144,91 +142,68 @@ def extract_row(html, media_spans, cfg_row) -> dict:
     the transform itself — sits inside the try: a hostile row must
     become an error ROW, never a task failure."""
     try:
-        source_url = _scalar(cfg_row.get("source_url"))
+        source_url = cfg_row.get("source_url")
         config = {
             "source_url": source_url,
-            "org": _scalar(cfg_row.get("org")) or "owner",
-            "site": _scalar(cfg_row.get("site")) or "repo",
-            "media_enabled": bool(_scalar(cfg_row.get("media_enabled"))),
+            "org": cfg_row.get("org") or "owner",
+            "site": cfg_row.get("site") or "repo",
+            "media_enabled": bool(cfg_row.get("media_enabled")),
             "media_lookup": build_media_lookup(media_spans, source_url),
-            "unspread_lists": bool(_scalar(cfg_row.get("unspread_lists"))),
+            "unspread_lists": bool(cfg_row.get("unspread_lists")),
             "external_prefixes": [
-                p
-                for p in (
-                    _scalar(cfg_row.get("external_prefixes")) or ""
-                ).split(",")
+                p for p in (cfg_row.get("external_prefixes") or "").split(",")
                 if p
             ],
-            "max_images": int(_scalar(cfg_row.get("max_images")) or 0) or None,
-            "max_image_size": int(_scalar(cfg_row.get("max_image_size")) or 0) or None,
-            "max_html_size": int(_scalar(cfg_row.get("max_html_size")) or 0) or None,
-            "boilerplate_fallback": bool(
-                _scalar(cfg_row.get("boilerplate_fallback"))
-            ),
+            "max_images": int(cfg_row.get("max_images") or 0) or None,
+            "max_image_size": int(cfg_row.get("max_image_size") or 0) or None,
+            "max_html_size": int(cfg_row.get("max_html_size") or 0) or None,
+            "boilerplate_fallback": bool(cfg_row.get("boilerplate_fallback")),
         }
         md = html2md(html, config)
     except (ConstraintsError, TooManyImagesError, SizeTooLargeError) as e:
-        return dict(md="", status="constraint_error", error=str(e), spans=[])
+        return _failed("constraint_error", str(e))
     except Exception as e:  # noqa: BLE001 - parse never aborts the job
-        return dict(md="", status="parse_error", error=f"{type(e).__name__}: {e}", spans=[])
+        return _failed("parse_error", f"{type(e).__name__}: {e}")
     md_stripped = md.strip()
     out_spans = decompose_md(md_stripped)
     return dict(md=md_stripped, status="ok", error="", spans=out_spans)
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _output(res: dict) -> dict:
+    """extract_row's result -> the EXTRACTED_SCHEMA columns."""
+    md = res["md"]
+    spans = res["spans"]
+    # counts media SPANS — each ![alt][imageN] occurrence AND each
+    # [imageN]: url definition line — i.e. "how much of the output is
+    # media markup", NOT distinct images (that count is the number of
+    # definition lines).  Pinned by the golden parquet and the
+    # __spark_entry__ query contract since round 1.
+    res["n_images"] = sum(1 for s in spans if s["kind"] == "media")
+    res["n_blocks"] = md.count("\n\n") + (1 if md else 0)
+    res["n_chars"] = len(md)
+    return res
+
+
+def _extract_one(row: dict) -> dict:
+    return _output(
+        extract_row(row["html_src"] or "", row["media_spans"] or [], row)
+    )
+
+
+def _gated(message: str) -> dict:
+    return _output(_failed("constraint_error", message))
+
+
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
     # the transform allocates heavily (DOM/mdast trees); the trees are
     # acyclic so raise the cyclic-GC threshold to keep workers off
     # needless collection walks
     import gc
 
     gc.set_threshold(200_000, 50, 50)
-    for pdf in batches:
-        out = {
-            "doc_id": [], "spans": [], "md": [], "status": [], "error": [],
-            "n_images": [], "n_blocks": [], "n_chars": [],
-        }
-        gate_errs = gate_errors(pdf)
-        for rownum, row in enumerate(pdf.itertuples(index=False)):
-            d = row._asdict()
-            gate_err = gate_errs[rownum]
-            if gate_err is not None:
-                # JVM admission gate already rejected this row (html was
-                # blanked before the Arrow crossing); emit its error row
-                out["doc_id"].append(d["doc_id"])
-                out["spans"].append([])
-                out["md"].append("")
-                out["status"].append("constraint_error")
-                out["error"].append(gate_err)
-                out["n_images"].append(0)
-                out["n_blocks"].append(0)
-                out["n_chars"].append(0)
-                continue
-            raw_media = d["media_spans"]
-            if raw_media is None:
-                raw_media = []
-            media = [
-                s if isinstance(s, dict) else s.asDict() for s in raw_media
-            ]
-            res = extract_row(d["html_src"] or "", media, d)
-            out["doc_id"].append(d["doc_id"])
-            out["spans"].append(
-                [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in res["spans"]]
-            )
-            out["md"].append(res["md"])
-            out["status"].append(res["status"])
-            out["error"].append(res["error"])
-            # counts media SPANS — each ![alt][imageN] occurrence AND
-            # each [imageN]: url definition line — i.e. "how much of the
-            # output is media markup", NOT distinct images (that count
-            # is the number of definition lines).  Pinned by the golden
-            # parquet and the driver contract since round 1.
-            out["n_images"].append(
-                sum(1 for s in res["spans"] if s["kind"] == "media")
-            )
-            out["n_blocks"].append(res["md"].count("\n\n") + (1 if res["md"] else 0))
-            out["n_chars"].append(len(res["md"]))
-        yield pd.DataFrame(out)
+    return map_rows(batches, _extract_one, EXTRACTED_SCHEMA, _gated)
 
 
 def _validate_defaults(defaults: dict) -> dict:
@@ -268,8 +243,8 @@ def prepare_for_extract(df: DataFrame, defaults: dict) -> DataFrame:
     html = concat of kind='html' span texts ordered by offset; media
     spans ride along as a (small) separate array.  Handing Python two
     flat columns instead of the full nested array<struct> keeps the
-    Arrow->pandas crossing cheap (strings stay columnar; nested structs
-    materialize per-row python objects).
+    Arrow crossing cheap (nested structs materialize per-row python
+    objects).
     """
     defaults = _validate_defaults(defaults)
     for c in _CONFIG_COLS:
@@ -383,7 +358,7 @@ def extract_documents(
     #   weighted - one extra bucketed-window pass assigns
     #              weight-class round-robin placement; measured max/mean
     #              partition-weight: hash 1.89 vs weighted 1.25 on the
-    #              Zipf corpus.  Task count stays == n: mapInPandas waves
+    #              Zipf corpus.  Task count stays == n: mapInArrow waves
     #              beyond the python worker pool thrash (identity pass
     #              1.1s @32 tasks vs 7.3s @128 tasks on local[32]).
     n = num_partitions or spark.sparkContext.defaultParallelism
@@ -432,6 +407,6 @@ def extract_documents(
             " (expected 'none', 'hash', or 'weighted')"
         )
 
-    return balanced.drop("_html_len").mapInPandas(
+    return balanced.drop("_html_len").mapInArrow(
         _extract_batches, schema=EXTRACTED_SCHEMA
     )

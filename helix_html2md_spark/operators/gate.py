@@ -1,28 +1,32 @@
-"""Shared JVM admission-gate plumbing.
+"""Shared JVM admission gate and Arrow row crossing.
 
 Every Arrow-crossing operator (HTML extraction, PDF parse, boilerplate
-strip) fronts its mapInPandas with the same two-sided pattern:
+strip) fronts its ``mapInArrow`` with the same two-sided pattern:
 
-* JVM side — a chained ``when`` builds ``_gate_error`` (first matching
-  rejection message wins) and the payload columns are BLANKED for
-  rejected rows, so dead bytes never reach the Arrow channel and
-  Catalyst keeps the whole gate inside codegen;
-* batch side — the Python worker reads ``_gate_error`` back per row
-  (absent column = ungated input; pandas may widen the all-NULL case
-  to NaN) and emits the operator's constraint_error row instead of
-  parsing.
+* JVM side (:func:`apply_gate`) — a chained ``when`` builds
+  ``_gate_error`` (first matching rejection message wins) and the
+  payload columns are BLANKED for rejected rows, so dead bytes never
+  reach the Arrow channel and Catalyst keeps the whole gate inside
+  codegen;
+* batch side (:func:`map_rows`) — the Python worker reads each Arrow
+  column once, emits the operator's error row for gate-rejected rows,
+  runs the operator's row function on the others, and builds the output
+  batch on the operator's explicit Spark schema.
 
 This module is the ONE home of both halves ("one guard to maintain,
 not two" — functions/text.py); the per-operator parts that genuinely
-differ (conditions, messages, error-row schema) stay at the call sites.
+differ (conditions, messages, row function, error row, schema) stay at
+the call sites.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def apply_gate(
@@ -55,21 +59,37 @@ def apply_gate(
     return df
 
 
-def gate_errors(pdf: pd.DataFrame) -> list:
-    """Batch-side reader: one Optional[str] per row of ``pdf``.
+def map_rows(
+    batches: Iterator[pa.RecordBatch],
+    row_fn: Callable[[dict], dict],
+    schema: StructType,
+    error_row: Callable[[str], dict],
+) -> Iterator[pa.RecordBatch]:
+    """The batch side of a gated ``mapInArrow``: one output row per input row.
 
-    Handles the three shapes the gate column arrives in: absent
-    entirely (operator fed an ungated frame — e.g. unit tests calling
-    the batch fn directly), None, and NaN (pandas widens an all-NULL
-    Arrow column to float64).  Read positionally, never via
-    ``itertuples`` — it name-mangles leading-underscore columns.
+    Each input column is read once with ``to_pylist()``, so NULLs arrive
+    as ``None`` (never pandas' NaN) and nested structs as dicts.  Output
+    columns that are also input columns (the row key, ``doc_id``) pass
+    through unchanged; ``row_fn(row)`` returns the others from a dict of
+    the row's input values.  A row the JVM gate rejected gets
+    ``error_row(message)`` instead (an absent ``_gate_error`` column
+    means ungated input).  Output batches are built on ``schema``'s
+    Arrow form, so pyarrow never re-infers ``array<struct>`` from lists.
     """
-    if "_gate_error" not in pdf.columns:
-        return [None] * len(pdf)
-    out = []
-    for e in pdf["_gate_error"].tolist():
-        if e is None or (isinstance(e, float) and e != e):  # NaN
-            out.append(None)
-        else:
-            out.append(str(e))
-    return out
+    arrow_schema = to_arrow_schema(schema)
+    names = schema.names
+    for batch in batches:
+        cols = batch.to_pydict()
+        n = batch.num_rows
+        gate = cols.pop("_gate_error", None) or [None] * n
+        computed = [c for c in names if c not in cols]
+        out = {c: cols[c] if c in cols else [] for c in names}
+        for i in range(n):
+            err = gate[i]
+            res = (
+                row_fn({c: v[i] for c, v in cols.items()})
+                if err is None else error_row(err)
+            )
+            for c in computed:
+                out[c].append(res[c])
+        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)

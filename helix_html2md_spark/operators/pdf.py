@@ -13,7 +13,9 @@ operator:
   byte-size cap and ``%PDF-`` magic check are native expressions; a
   rejected row's payload is blanked so oversized/non-PDF bytes never
   cross the Arrow boundary
-* exactly one ``mapInPandas`` (Arrow-batched; no per-row Python UDF)
+* exactly one ``mapInArrow`` (Arrow-batched; no per-row Python UDF, no
+  pandas conversion) through ``gate.map_rows``, on the extraction
+  operator's own ``SPAN_TYPE``
 * per-row error capture into status/error — a malformed PDF degrades
   that row, never the job
 """
@@ -22,28 +24,20 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
 from ..core.pdfparse import PdfError, parse_pdf
-from .gate import apply_gate, gate_errors
-
-PDF_SPAN_TYPE = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("order", IntegerType()),
-    ]
-)
+from .extract import SPAN_TYPE
+from .gate import apply_gate, map_rows
 
 PDF_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(PDF_SPAN_TYPE)),
+        StructField("spans", ArrayType(SPAN_TYPE)),
         StructField("status", StringType()),
         StructField("error", StringType()),
         StructField("n_headings", IntegerType()),
@@ -56,42 +50,36 @@ PDF_SCHEMA = StructType(
 _MAGIC = "255044462D"  # b"%PDF-"
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k.name: [] for k in PDF_SCHEMA.fields}
-        gate_errs = gate_errors(pdf)
-        for rownum, (doc_id, payload) in enumerate(
-            zip(pdf["doc_id"], pdf["payload"])
-        ):
-            gate_err = gate_errs[rownum]
-            spans: list[dict] = []
-            if gate_err is not None:
-                status, error = "constraint_error", gate_err
-            else:
-                try:
-                    spans = parse_pdf(bytes(payload))
-                    status, error = "ok", ""
-                except PdfError as e:
-                    status, error = "parse_error", str(e)
-                except Exception as e:  # noqa: BLE001 - row-level resilience
-                    status, error = (
-                        "parse_error", f"{type(e).__name__}: {e}",
-                    )
-            out["doc_id"].append(doc_id)
-            out["spans"].append(spans)
-            out["status"].append(status)
-            out["error"].append(error)
-            out["n_headings"].append(
-                sum(1 for s in spans if s["kind"] == "heading")
-            )
-            out["n_text"].append(sum(1 for s in spans if s["kind"] == "text"))
-            out["n_images"].append(
-                sum(1 for s in spans if s["kind"] == "image")
-            )
-            out["n_chars"].append(
-                sum(len(s["text"] or "") for s in spans)
-            )
-        yield pd.DataFrame(out)
+def _pdf_row(spans: list[dict], status: str, error: str) -> dict:
+    """The PDF_SCHEMA columns of one parsed (or failed) document."""
+    return {
+        "spans": spans,
+        "status": status,
+        "error": error,
+        "n_headings": sum(1 for s in spans if s["kind"] == "heading"),
+        "n_text": sum(1 for s in spans if s["kind"] == "text"),
+        "n_images": sum(1 for s in spans if s["kind"] == "image"),
+        "n_chars": sum(len(s["text"] or "") for s in spans),
+    }
+
+
+def _parse_one(row: dict) -> dict:
+    try:
+        return _pdf_row(parse_pdf(bytes(row["payload"])), "ok", "")
+    except PdfError as e:
+        return _pdf_row([], "parse_error", str(e))
+    except Exception as e:  # noqa: BLE001 - row-level resilience
+        return _pdf_row([], "parse_error", f"{type(e).__name__}: {e}")
+
+
+def _gated(message: str) -> dict:
+    return _pdf_row([], "constraint_error", message)
+
+
+def _parse_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    return map_rows(batches, _parse_one, PDF_SCHEMA, _gated)
 
 
 def parse_pdf_documents(
@@ -102,7 +90,7 @@ def parse_pdf_documents(
 ) -> DataFrame:
     """Parse a (doc_id, payload binary) table into layout spans.
 
-    Single-pass JVM gate (size + magic) -> one mapInPandas.  At 100 TB
+    Single-pass JVM gate (size + magic) -> one mapInArrow.  At 100 TB
     the gate matters twice: Catalyst cannot push predicates through the
     Python stage, and blanking rejected payloads JVM-side keeps dead
     bytes off the Arrow channel entirely.
@@ -132,4 +120,4 @@ def parse_pdf_documents(
     )
     if num_partitions:
         gated = gated.repartition(num_partitions, "doc_id")
-    return gated.mapInPandas(_parse_batches, PDF_SCHEMA)
+    return gated.mapInArrow(_parse_batches, PDF_SCHEMA)

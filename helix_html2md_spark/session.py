@@ -17,7 +17,11 @@ def build_session(
     """Create/get a session.
 
     * Arrow batches are capped small (64 rows) because a batch of 1 MB
-      documents must fit in the Python worker (SURVEY.md §4.2).
+      documents must fit in the Python worker (SURVEY.md §4.2).  With the
+      Arrow row crossing (operators/gate.py::map_rows), 64, 256 and 1024
+      rows per batch measured flat on perfbench's ``small_pages``
+      (median docs/s 3039 / 2800 / 2952, three runs each, 4-vCPU VM),
+      so the cap stays at 64 for that memory bound.
     * AQE on: runtime coalescing + skew-join handling for the relational
       side-queries.
     """

@@ -45,7 +45,7 @@ def stream_extract(
 
     # ONE implementation: the batch operator in its zero-shuffle 'none'
     # placement mode is stream-safe (select -> broadcast config join ->
-    # assembly -> gate -> mapInPandas, no Window/repartition), so the
+    # assembly -> gate -> mapInArrow, no Window/repartition), so the
     # stream cannot drift from the batch gate/assembly — the oracle
     # requires byte-identical markdown from both surfaces
     defaults = dict(defaults or {})

@@ -135,8 +135,9 @@ def test_operator_gate_and_plan(spark):
     assert got["ok"]["status"] == "no_content"
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan
-    assert plan.count("MapInPandas") == 1
-    assert plan.index("MapInPandas") < plan.index("Project")
+    assert plan.count("MapInArrow _strip_batches") == 1
+    assert "MapInPandas" not in plan
+    assert plan.index("MapInArrow _strip_batches") < plan.index("Project")
 
 
 def test_reference_fixture_htmls_never_raise():

@@ -3,6 +3,9 @@
 tokenizer adjacency, hard-break placement, '+ ' prose misclassification.
 All scenarios were repro-verified against the pre-fix code."""
 
+import pytest
+
+from helix_html2md_spark.core import gridtable
 from helix_html2md_spark.core.gridtable import (
     _is_atom_line, _wrap_text, min_content_width, wrap_cell,
 )
@@ -33,6 +36,29 @@ def test_garbage_spans_are_clamped():
     # the canvas stays bounded: every rendered line is modest
     assert max(len(line) for line in md.splitlines()) < 5000
     assert "| a" in md and "| b" in md
+
+
+def test_occupancy_key_packing_fails_loudly(monkeypatch):
+    """Occupancy keys pack (row << _OCC_SHIFT) | col: a column index
+    reaching 1 << _OCC_SHIFT would alias the next row's keys and
+    silently misplace cells.  The html size gate keeps real tables far
+    below that, but it is configurable, so layout_rows must refuse the
+    table instead.  Pinned with a 3-bit shift (8 columns)."""
+    monkeypatch.setattr(gridtable, "_OCC_SHIFT", 3)
+
+    def table(*rows):  # one gtRow per entry: a list of colspans
+        return {"children": [
+            {"type": "gtRow", "children": [{"colSpan": c} for c in row]}
+            for row in rows
+        ]}
+
+    cells, nrows, ncols, _, occupied = gridtable.layout_rows(
+        table([1] * 8, [1] * 8), lambda node: []
+    )
+    assert (nrows, ncols, len(cells), len(occupied)) == (2, 8, 16, 16)
+    for wide in ([1] * 9, [2] + [1] * 7):
+        with pytest.raises(ValueError, match="wider than 8 columns"):
+            gridtable.layout_rows(table(wide, [1]), lambda node: [])
 
 
 def test_wrap_keeps_abutting_strong_run_glued():

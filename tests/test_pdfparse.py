@@ -181,7 +181,7 @@ def test_operator_end_to_end(spark):
 def test_operator_gate_is_jvm_side(spark):
     """Size/magic admission runs before the Python stage: the plan has
     exactly one scan, no Union, and the gate expressions sit below
-    MapInPandas (same discipline as test_plan_quality.py for HTML)."""
+    MapInArrow (same discipline as test_plan_quality.py for HTML)."""
     from helix_html2md_spark.operators.pdf import parse_pdf_documents
 
     df = spark.createDataFrame(
@@ -189,9 +189,11 @@ def test_operator_gate_is_jvm_side(spark):
     )
     plan = parse_pdf_documents(df)._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan  # single-pass, not ok/rejected branches
-    assert plan.count("MapInPandas") == 1  # exactly one Python crossing
-    # the gate CASE WHEN lives in a native Project BELOW MapInPandas
-    assert plan.index("MapInPandas") < plan.index("Project")
+    # exactly one Python crossing
+    assert plan.count("MapInArrow _parse_batches") == 1
+    assert "MapInPandas" not in plan
+    # the gate CASE WHEN lives in a native Project BELOW MapInArrow
+    assert plan.index("MapInArrow _parse_batches") < plan.index("Project")
     assert "CASE WHEN" in plan and "_gate_error" in plan
 
 

@@ -42,10 +42,11 @@ def test_region_rollup_broadcasts_dims(spark):
 _STREAMING_QUERIES = {
     "stream_extract", "stream_pdf_extract", "stream_dedup", "stream_dedup_wm",
 }
-# queries whose ONE intentional Python crossing is a gated mapInPandas
-# (extraction / media decode / centroid map-side partials); everything
-# else in the battery must stay pure JVM
-_MAPINPANDAS_OK = {
+# queries whose ONE intentional Python crossing is a gated mapInArrow
+# (extraction, PDF parse, boilerplate strip) or mapInPandas (media
+# decode, centroid map-side partials); everything else in the battery
+# must stay pure JVM
+_MAP_IN_PYTHON_OK = {
     "extract_spans", "media_features", "resized_images", "frame_samples",
     "pdf_extract", "boilerplate", "label_centroids", "extract_fallback",
 }
@@ -56,7 +57,8 @@ def test_battery_queries_stay_jvm_side(spark):
     whole-stage-codegen-able.  Grouped Python (applyInPandas →
     FlatMapGroupsInPandas: whole groups cross Arrow) is banned for EVERY
     battery query, exempted or not — the exempted queries' one allowed
-    crossing is a gated mapInPandas (map-side, bounded batches)."""
+    crossing is a gated mapInArrow/mapInPandas (map-side, bounded
+    batches)."""
     import __spark_entry__ as E
 
     for name, fn in E.queries().items():
@@ -64,11 +66,12 @@ def test_battery_queries_stay_jvm_side(spark):
             continue
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert "FlatMapGroupsInPandas" not in plan, name
-        if name in _MAPINPANDAS_OK:
+        if name in _MAP_IN_PYTHON_OK:
             continue
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         assert "MapInPandas" not in plan, name
+        assert "MapInArrow" not in plan, name
 
 
 def test_pack_sequences_has_no_single_partition_window(spark):
@@ -95,7 +98,7 @@ def test_extraction_gate_before_python(spark):
     docs = synthetic_documents(spark, 10, seed=1, partitions=2)
     out = extract_documents(docs, None, num_partitions=2)
     plan = _optimized(out)
-    python_pos = plan.find("MapInPandas _extract_batches")
+    python_pos = plan.find("MapInArrow _extract_batches")
     assert python_pos >= 0
     # single-pass gate: the size-routing expression (html_len > 1 MB ->
     # blank html + _gate_error) sits in the subtree BELOW the python node
@@ -104,7 +107,8 @@ def test_extraction_gate_before_python(spark):
     gate_pos = plan.find("1048576")
     assert gate_pos > python_pos
     assert "Union" not in plan
-    assert plan.count("MapInPandas _extract_batches") == 1
+    assert plan.count("MapInArrow _extract_batches") == 1
+    assert plan.count("MapInArrow") == 1
     assert plan.count("Range (0, 10") == 1
 
 

@@ -3,7 +3,7 @@
 Asserts the per-row invariant from BASELINE.json/FIXTURES.md §2:
 span-sequence equality -> md byte equality vs every golden fixture, plus
 status/error classification for the error-only fixtures, all through
-``mapInPandas`` on a local SparkSession.
+``mapInArrow`` on a local SparkSession.
 """
 
 import pytest
