@@ -370,65 +370,6 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_SEEDS, _IVF_NPROBE = 16, 4
 
 _DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
-_MEDIA = os.path.join(_DATA_DIR, "media.parquet")
-
-
-def _media(spark):
-    """Deterministic multimodal fixture table (binary payloads + typed
-    metadata), committed at data/media.parquet; the same rows
-    operators/multimodal.synthetic_media produces — see
-    scratch/gen_golden_media.py and tests/test_golden_media.py."""
-    return spark.read.parquet(_MEDIA)
-
-
-def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-kind media metadata rollup — pure JVM (no decode), oracled by
-    straight SQL over the same parquet."""
-    from helix_html2md_spark.operators.multimodal import media_stats
-
-    return media_stats(_media(spark))
-
-
-def q_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio chunk manifest (JVM-side sequence/explode of 5s chunk
-    boundaries, no decode) — oracled by SQL range-unnest."""
-    from helix_html2md_spark.operators.multimodal import audio_chunks
-
-    return audio_chunks(_media(spark)).orderBy("media_id", "chunk_idx")
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads (the codec
-    slot runs the deterministic stand-in decoder); feature vectors are
-    pinned by feature_md5 = md5 of their float32 bytes.  Oracle = golden
-    parquet produced by an independent pure-numpy implementation
-    (scratch/gen_golden_media.py), re-derived in
-    tests/test_golden_media.py."""
-    from helix_html2md_spark.operators.multimodal import extract_features
-
-    return extract_features(_media(spark)).select(
-        "media_id", "doc_id", "kind", "n_bytes", "sha1", "feature_md5"
-    ).orderBy("media_id")
-
-
-def q_resized_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image resize to 32x32 (nearest-neighbor numpy resample over the
-    stand-in decode), pinned by resized_sha1; golden-parquet oracle."""
-    from helix_html2md_spark.operators.multimodal import resize_images
-
-    return resize_images(_media(spark), out_w=32, out_h=32).select(
-        "media_id", "doc_id", "out_width", "out_height", "resized_sha1"
-    ).orderBy("media_id")
-
-
-def q_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling (1 fps, capped fan-out), frames pinned by
-    sha1; golden-parquet oracle."""
-    from helix_html2md_spark.operators.multimodal import sample_frames
-
-    return sample_frames(_media(spark), every_ms=1000, max_frames=32).select(
-        "media_id", "doc_id", "frame_idx", "ts_ms", "frame_sha1"
-    ).orderBy("media_id", "frame_idx")
 
 
 def q_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,19 +988,18 @@ def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The driver contract: EXACTLY 50 queries.
+    """The driver contract: AT MOST 50 queries, every one oracled.
 
     CORRECTNESS_r0{1,2,3,4} carried 19, 29, 44, then 50-of-54 rows —
     the round-4 artifact truncated at precisely 50 in dict order, so
-    the driver records at most 50 queries per round.  The contract
-    therefore holds the line at 50: round 5 folded six queries whose
-    operators are covered elsewhere (span_assembly, doc_stats,
-    minhash_signatures, region_cube, event_stats, ivf_topk — all six
-    operators remain in the package under pytest) to make room for the
-    two round-5 surfaces (ivf_sq_topk, stream_dedup_wm) while keeping
-    every entry inside the artifact.  Ordering is cheapest-first-ish
-    with the round-4-missing four up front, streaming e2e last, so any
-    budget cutoff eats the most-proven tail, not fresh surfaces."""
+    the driver records at most 50 queries per round.  Round 5 folded
+    six queries whose operators are covered elsewhere (span_assembly,
+    doc_stats, minhash_signatures, region_cube, event_stats, ivf_topk —
+    all six operators remain in the package under pytest) to make room
+    for ivf_sq_topk and stream_dedup_wm; the five media queries left
+    with the media operators.  Ordering is cheapest-first-ish with the
+    round-4-missing four up front, streaming e2e last, so any budget
+    cutoff eats the most-proven tail, not fresh surfaces."""
     return {
         "extract_spans": q_extract_spans,
         "dup_components": q_dup_components,
@@ -1087,11 +1027,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_mix": q_corpus_mix,
         "gopher_filter": q_gopher_filter,
         "tfidf_terms": q_tfidf_terms,
-        "media_stats": q_media_stats,
-        "audio_chunks": q_audio_chunks,
-        "media_features": q_media_features,
-        "resized_images": q_resized_images,
-        "frame_samples": q_frame_samples,
         "pdf_extract": q_pdf_extract,
         "boilerplate": q_boilerplate,
         "extract_fallback": q_extract_fallback,
@@ -1296,43 +1231,6 @@ def oracle_sql() -> dict[str, str]:
         # construction (same seeds, same probe, same exact re-rank)
         "ivf_index_topk": _ivf_topk_oracle(),
         "ivf_sq_topk": _ivf_sq_topk_oracle(),
-        "media_stats": f"""
-            SELECT kind,
-                   count(*) AS n_items,
-                   cast(sum(octet_length(payload)) AS bigint) AS total_bytes,
-                   max(width) AS max_width
-            FROM read_parquet('{_MEDIA}')
-            GROUP BY kind ORDER BY kind
-        """,
-        "audio_chunks": f"""
-            WITH a AS (
-              SELECT media_id, doc_id, duration_ms,
-                     unnest(range(least(greatest(
-                       cast(ceil(duration_ms / 5000.0) AS int), 1
-                     ), 4096))) AS ci
-              FROM read_parquet('{_MEDIA}')
-              WHERE kind = 'audio' AND duration_ms >= 0)
-            SELECT media_id, doc_id,
-                   cast(ci AS int) AS chunk_idx,
-                   cast(ci * 5000 AS int) AS start_ms,
-                   cast(least((ci + 1) * 5000, duration_ms) AS int) AS end_ms
-            FROM a ORDER BY media_id, chunk_idx
-        """,
-        "media_features": f"""
-            SELECT media_id, doc_id, kind, n_bytes, sha1, feature_md5
-            FROM read_parquet('{_DATA_DIR}/golden_media_features.parquet')
-            ORDER BY media_id
-        """,
-        "resized_images": f"""
-            SELECT media_id, doc_id, out_width, out_height, resized_sha1
-            FROM read_parquet('{_DATA_DIR}/golden_media_resized.parquet')
-            ORDER BY media_id
-        """,
-        "frame_samples": f"""
-            SELECT media_id, doc_id, frame_idx, ts_ms, frame_sha1
-            FROM read_parquet('{_DATA_DIR}/golden_media_frames.parquet')
-            ORDER BY media_id, frame_idx
-        """,
         "pdf_extract": f"""
             SELECT doc_id, status, error, n_headings, n_text, n_images,
                    n_chars, spans_md5

@@ -43,12 +43,11 @@ _STREAMING_QUERIES = {
     "stream_extract", "stream_pdf_extract", "stream_dedup", "stream_dedup_wm",
 }
 # queries whose ONE intentional Python crossing is a gated mapInArrow
-# (extraction, PDF parse, boilerplate strip) or mapInPandas (media
-# decode, centroid map-side partials); everything else in the battery
-# must stay pure JVM
+# (extraction, PDF parse, boilerplate strip) or mapInPandas (centroid
+# map-side partials); everything else in the battery must stay pure JVM
 _MAP_IN_PYTHON_OK = {
-    "extract_spans", "media_features", "resized_images", "frame_samples",
-    "pdf_extract", "boilerplate", "label_centroids", "extract_fallback",
+    "extract_spans", "pdf_extract", "boilerplate", "label_centroids",
+    "extract_fallback",
 }
 
 
@@ -58,7 +57,8 @@ def test_battery_queries_stay_jvm_side(spark):
     FlatMapGroupsInPandas: whole groups cross Arrow) is banned for EVERY
     battery query, exempted or not — the exempted queries' one allowed
     crossing is a gated mapInArrow/mapInPandas (map-side, bounded
-    batches)."""
+    batches), and it appears exactly once; row-at-a-time and scalar
+    Arrow UDFs are banned everywhere."""
     import __spark_entry__ as E
 
     for name, fn in E.queries().items():
@@ -66,12 +66,10 @@ def test_battery_queries_stay_jvm_side(spark):
             continue
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert "FlatMapGroupsInPandas" not in plan, name
-        if name in _MAP_IN_PYTHON_OK:
-            continue
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
-        assert "MapInPandas" not in plan, name
-        assert "MapInArrow" not in plan, name
+        crossings = plan.count("MapInArrow") + plan.count("MapInPandas")
+        assert crossings == (1 if name in _MAP_IN_PYTHON_OK else 0), name
 
 
 def test_pack_sequences_has_no_single_partition_window(spark):
@@ -147,14 +145,14 @@ def test_jaccard_verify_prunes_corpus_side(spark):
 
 def test_driver_contract_holds_the_50_query_line():
     """The driver artifact records AT MOST 50 queries (measured across
-    rounds 1-4); the contract therefore holds EXACTLY 50, every one
+    rounds 1-4); the contract therefore holds at most 50, every one
     oracled.  Growing past 50 silently drops rows from the correctness
     artifact — cut before adding (BASELINE.md 'Contract change
     (round 5)')."""
     import __spark_entry__ as E
 
     q, o = E.queries(), E.oracle_sql()
-    assert len(q) == 50, sorted(q)
+    assert len(q) <= 50, sorted(q)
     assert set(o) == set(q), {
         "missing_oracle": sorted(set(q) - set(o)),
         "orphan_oracle": sorted(set(o) - set(q)),

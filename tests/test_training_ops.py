@@ -1,5 +1,4 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing."""
+"""Training-data pipeline operators: dedup, similarity, text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -196,161 +195,6 @@ def test_quality_features(spark, docs):
     assert q[1]["n_tokens"] == 9
     assert q[1]["stopword_ratio"] == pytest.approx(2 / 9, abs=1e-6)
     assert q[5]["n_tokens"] == 0  # empty doc is safe
-
-
-def test_multimodal_features(spark):
-    from helix_html2md_spark.operators.multimodal import (
-        extract_features, media_stats, synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    stats = {r["kind"]: r["n_items"] for r in media_stats(media).collect()}
-    # kinds cycle i%3 — exact classification, not just a row-count sum
-    assert stats == {"image": 10, "audio": 10, "video": 10}
-    feats = extract_features(media).collect()
-    assert len(feats) == 30
-    by_id = {r["media_id"]: r for r in feats}
-    assert len(by_id["m000000"]["feature"]) == 16
-    # deterministic: same payload -> same feature
-    feats2 = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert feats2 == {k: v["feature"] for k, v in by_id.items()}
-
-
-def test_frame_sampling_deterministic(spark):
-    from helix_html2md_spark.operators.multimodal import (
-        sample_frames, synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    frames = sample_frames(media, every_ms=1000, max_frames=5).collect()
-    videos = {r["media_id"] for r in frames}
-    # kind cycles i%3 -> exactly 10 videos, each with duration
-    # 1000 + i%9000 in [1002, 1029] ms -> exactly 2 sampled frames
-    assert len(videos) == 10
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for mid, rows in by_media.items():
-        idxs = sorted(r["frame_idx"] for r in rows)
-        assert idxs == [0, 1], (mid, idxs)
-        assert len(rows) <= 5  # max_frames cap
-        assert all(r["ts_ms"] == r["frame_idx"] * 1000 for r in rows)
-    # deterministic: same input -> same frame hashes
-    again = {
-        (r["media_id"], r["frame_idx"]): r["frame_sha1"]
-        for r in sample_frames(media, every_ms=1000, max_frames=5).collect()
-    }
-    assert again == {
-        (r["media_id"], r["frame_idx"]): r["frame_sha1"] for r in frames
-    }
-
-
-def test_resize_images(spark):
-    from helix_html2md_spark.operators.multimodal import (
-        resize_images, synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    resized = resize_images(media, out_w=8, out_h=8).collect()
-    n_images = media.filter("kind = 'image'").count()
-    assert len(resized) == n_images
-    for r in resized:
-        assert r["out_width"] == 8 and r["out_height"] == 8
-        assert len(r["resized"]) == 64  # 8x8 uint8
-    # deterministic
-    again = {
-        r["media_id"]: r["resized_sha1"]
-        for r in resize_images(media, out_w=8, out_h=8).collect()
-    }
-    assert again == {r["media_id"]: r["resized_sha1"] for r in resized}
-
-
-def test_resize_images_rgb_decoder_keeps_channels(spark):
-    """An injected real-codec-shaped decoder — 3-D (h, w, 3) uint8 —
-    must resample channel-planes intact (the old reshape(h, -1) fed
-    interleaved R/G/B components to the sampler as if they were
-    pixels) and normalize [0, 255] instead of wrapping modulo 256."""
-    import numpy as np
-
-    from helix_html2md_spark.operators.multimodal import (
-        resize_images, synthetic_media,
-    )
-
-    def rgb_decoder(payload: bytes) -> np.ndarray:
-        img = np.zeros((20, 24, 3), dtype=np.uint8)
-        img[..., 0] = 10
-        img[..., 1] = 128
-        img[..., 2] = 250
-        return img
-
-    media = synthetic_media(spark, 12).filter("kind = 'image'")
-    rows = resize_images(media, 4, 4, decoder=rgb_decoder).collect()
-    assert rows and all(r["error"] is None for r in rows)
-    for r in rows:
-        px = np.frombuffer(r["resized"], dtype=np.uint8).reshape(4, 4, 3)
-        assert (px[..., 0] == 10).all()
-        assert (px[..., 1] == 128).all()
-        assert (px[..., 2] == 250).all()
-
-
-def test_audio_chunks_cap_and_negative_duration(spark):
-    from helix_html2md_spark.operators.multimodal import audio_chunks
-
-    media = spark.createDataFrame(
-        [
-            ("m1", "d1", "audio", b"", None, None, 2_147_483_647),
-            ("m2", "d2", "audio", b"", None, None, -5),
-            ("m3", "d3", "audio", b"", None, None, 7000),
-        ],
-        "media_id string, doc_id string, kind string, payload binary, "
-        "width int, height int, duration_ms long",
-    )
-    rows = audio_chunks(media, chunk_ms=5000, max_chunks=16).collect()
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r["media_id"], []).append(r)
-    # corrupt 2^31-1 ms duration: fan-out bounded, not ~429k rows
-    assert len(by_media["m1"]) == 16
-    # negative duration = unmeasured: dropped, never end_ms < start_ms
-    assert "m2" not in by_media
-    assert len(by_media["m3"]) == 2
-
-
-def test_audio_chunks(spark):
-    from helix_html2md_spark.operators.multimodal import (
-        audio_chunks, synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    chunks = audio_chunks(media, chunk_ms=3000).collect()
-    assert chunks
-    durations = {
-        r["media_id"]: r["duration_ms"]
-        for r in media.filter("kind = 'audio'").collect()
-    }
-    by_media = {}
-    for r in chunks:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for mid, rows in by_media.items():
-        rows.sort(key=lambda r: r["chunk_idx"])
-        assert rows[0]["start_ms"] == 0
-        assert rows[-1]["end_ms"] == durations[mid]  # covers full duration
-        for a, b in zip(rows, rows[1:]):
-            assert b["start_ms"] == a["end_ms"] == a["start_ms"] + 3000
-
-
-def test_multimodal_decode_slots():
-    from helix_html2md_spark.operators.multimodal import (
-        decode_frame, decode_image,
-    )
-
-    # decode_image is REAL for PNG/BMP/WAV now (core/codecs.py); a
-    # truncated PNG raises ValueError (row-resilience contract), and
-    # the video frame slot stays an injectable stub
-    with pytest.raises(ValueError):
-        decode_image(b"\x89PNG")  # signature fragment, not a PNG
-    with pytest.raises(NotImplementedError):
-        decode_frame(b"\x00\x00\x00\x18ftyp", 0)
 
 
 def test_ivf_topk_recall(spark):
