@@ -1,7 +1,8 @@
 """Regression tests for the round-5 gridtable review findings
 (core/gridtable.py): span clamping, rowspan-overflow crash, wrap
-tokenizer adjacency, hard-break placement, '+ ' prose misclassification.
-All scenarios were repro-verified against the pre-fix code."""
+tokenizer adjacency, hard-break placement, '+ ' prose misclassification,
+and the grid-area bound.  All scenarios were repro-verified against the
+pre-fix code."""
 
 import pytest
 
@@ -10,6 +11,8 @@ from helix_html2md_spark.core.gridtable import (
     _is_atom_line, _wrap_text, min_content_width, wrap_cell,
 )
 from helix_html2md_spark.core.html2md import html2md
+from helix_html2md_spark.core.transform import ConstraintsError
+from helix_html2md_spark.operators.extract import extract_row
 
 
 def _table_md(html):
@@ -38,27 +41,46 @@ def test_garbage_spans_are_clamped():
     assert "| a" in md and "| b" in md
 
 
-def test_occupancy_key_packing_fails_loudly(monkeypatch):
-    """Occupancy keys pack (row << _OCC_SHIFT) | col: a column index
-    reaching 1 << _OCC_SHIFT would alias the next row's keys and
-    silently misplace cells.  The html size gate keeps real tables far
-    below that, but it is configurable, so layout_rows must refuse the
-    table instead.  Pinned with a 3-bit shift (8 columns)."""
-    monkeypatch.setattr(gridtable, "_OCC_SHIFT", 3)
+def test_grid_area_bound_fails_fast():
+    """25 rows of ten colspan="100000" cells (7 KB of html, 25 x 10,000
+    grid) once rendered 2 MB of markdown in over a second.  The grid is
+    refused as a constraint error before any cell is rendered, and the
+    bound counts grid positions, not cells."""
+    html = "<table>" + (
+        "<tr>" + '<td colspan="100000">x</td>' * 10 + "</tr>"
+    ) * 25 + "</table>"
+    with pytest.raises(ConstraintsError, match="more than 100000 cells"):
+        _table_md(html)
+    res = extract_row(f"<html><body><main>{html}</main></body></html>", [], {})
+    assert res["status"] == "constraint_error"
+    assert res["error"] == "grid table covers more than 100000 cells"
 
-    def table(*rows):  # one gtRow per entry: a list of colspans
+    def table(nrows, *row):  # nrows copies of one row of colspans
         return {"children": [
             {"type": "gtRow", "children": [{"colSpan": c} for c in row]}
-            for row in rows
-        ]}
+        ] * nrows}
 
-    cells, nrows, ncols, _, occupied = gridtable.layout_rows(
-        table([1] * 8, [1] * 8), lambda node: []
+    def never(node):
+        raise AssertionError("a refused table renders no cell")
+
+    assert gridtable.MAX_GRID_CELLS == 100_000
+    cells, grid, ncols, _, _ = gridtable.layout_rows(
+        table(100, 1000), lambda node: [""]
     )
-    assert (nrows, ncols, len(cells), len(occupied)) == (2, 8, 16, 16)
-    for wide in ([1] * 9, [2] + [1] * 7):
-        with pytest.raises(ValueError, match="wider than 8 columns"):
-            gridtable.layout_rows(table(wide, [1]), lambda node: [])
+    assert (len(cells), len(grid), ncols) == (100, 100, 1000)
+    with pytest.raises(ConstraintsError):
+        gridtable.layout_rows(table(101, 1000), never)
+    # overlapping spans count every position they cover: on a 100 x 1000
+    # grid (at the bound), a 999-wide cell spans all rows and the next
+    # row's 1000-wide cell is placed over it
+    overlap = {"children": [
+        {"type": "gtRow", "children": [
+            {"colSpan": 1}, {"colSpan": 999, "rowSpan": 100}]},
+    ] + [
+        {"type": "gtRow", "children": [{"colSpan": 1000}]}
+    ] * 99}
+    with pytest.raises(ConstraintsError):
+        gridtable.layout_rows(overlap, never)
 
 
 def test_wrap_keeps_abutting_strong_run_glued():
