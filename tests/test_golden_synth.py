@@ -1,6 +1,6 @@
 """The frozen digest oracle of the HTML extraction path
 (``data/golden_synth_md.parquet``, inputs in tests/golden_synth_inputs.py),
-recomputed in-process without Spark.  A PR that moves a digest
+recomputed in-process without Spark.  A change that moves a digest
 regenerates the table with scratch/gen_golden_synth.py and says why."""
 
 import os
