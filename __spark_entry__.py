@@ -846,20 +846,6 @@ def q_extract_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def q_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked windowed aggregation (streaming operator run in batch
-    mode — identical plan semantics; the watermark is a no-op on batch)."""
-    from helix_html2md_spark.operators.relational import load
-    from helix_html2md_spark.streaming.stream import windowed_event_counts
-
-    out = windowed_event_counts(
-        load(spark, sf_dir, "events"), window="1 hour"
-    )
-    return out.select(
-        "window_start", "event_type", "n_events", "sum_value"
-    ).orderBy("window_start", "event_type")
-
-
 def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END Structured Streaming extraction: write the fixture
     spans table to a landing dir, run the availableNow stream through
@@ -882,61 +868,6 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END streaming exact dedup: land the documents table, run
-    the availableNow state-backed dropDuplicates stream, read the
-    checkpointed sink back.  Output is content-determined only
-    (content_md5, text_len) — arrival order never shows.  Oracle:
-    SELECT DISTINCT over the same table."""
-    from helix_html2md_spark.streaming.stream import stream_dedup
-
-    base = _stream_base("dedup")
-    _docs(spark, sf_dir).write.parquet(f"{base}/in")
-    q = stream_dedup(spark, f"{base}/in", f"{base}/out", f"{base}/cp")
-    q.awaitTermination()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .select("content_md5", "text_len")
-        .orderBy("content_md5")
-    )
-
-
-def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END streaming dedup with BOUNDED state
-    (streaming/stream.py::stream_dedup_wm): watermarked
-    dropDuplicatesWithinWatermark over an event-time documents stream.
-    Event time is DERIVED FROM CONTENT (epoch 2024-01-01 + text_len %
-    3600 s), so every duplicate of a content hash shares one ts and the
-    emitted row is fully content-determined; the landing zone is ONE
-    file = one availableNow microbatch, so the initial watermark (0)
-    suppresses every duplicate deterministically.  Watermark EVICTION
-    semantics (state bounded, late re-emits) are pinned by
-    tests/test_streaming.py, which drives multi-batch restarts."""
-    from helix_html2md_spark.streaming.stream import stream_dedup_wm
-
-    base = _stream_base("dedup_wm")
-    docs = _docs(spark, sf_dir).withColumn(
-        "ts",
-        F.timestamp_seconds(
-            F.lit(1704067200).cast("long")
-            + F.length(F.coalesce("text", F.lit(""))).cast("long")
-            % 3600
-        ),
-    )
-    docs.coalesce(1).write.parquet(f"{base}/in")
-    q = stream_dedup_wm(spark, f"{base}/in", f"{base}/out", f"{base}/cp")
-    q.awaitTermination()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .select(
-            "content_md5",
-            "text_len",
-            F.unix_micros("ts").alias("t_us"),
-        )
-        .orderBy("content_md5")
-    )
-
-
 def q_stream_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END Structured Streaming PDF layout parse: land the
     committed PDF table, run the availableNow stream (same JVM gate +
@@ -957,34 +888,9 @@ def q_stream_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END applyInPandasWithState sessionizer: events written to a
-    landing dir as ONE file (one availableNow microbatch, deterministic),
-    streamed through the custom stateful operator, sink read back.  The
-    operator emits gap-closed sessions; each user's final session stays
-    in state, so the oracle is SQL gap-sessionization minus the last
-    session per user."""
-    from helix_html2md_spark.streaming.stream import stateful_sessionize
-
-    base = _stream_base("state")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.coalesce(1).write.parquet(f"{base}/in")
-    stream = spark.readStream.schema(ev.schema).parquet(f"{base}/in")
-    q = (
-        stateful_sessionize(stream, use_timeout=False)
-        .writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/cp")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .select("user_id", "n_events", "closed_by")
-        .orderBy("user_id", "n_events")
-    )
+# the queries that run a Structured Streaming job when called: they
+# have no lazy plan to inspect and time stream machinery, not the engine
+STREAMING_QUERIES = frozenset({"stream_extract", "stream_pdf_extract"})
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -996,17 +902,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     six queries whose operators are covered elsewhere (span_assembly,
     doc_stats, minhash_signatures, region_cube, event_stats, ivf_topk —
     all six operators remain in the package under pytest) to make room
-    for ivf_sq_topk and stream_dedup_wm; the five media queries left
-    with the media operators.  Ordering is cheapest-first-ish with the
-    round-4-missing four up front, streaming e2e last, so any budget
-    cutoff eats the most-proven tail, not fresh surfaces."""
+    for two new queries; the five media queries left with the media
+    operators, and the streaming dedup, sessionizer and windowed-count
+    queries left with their operators.  Ordering is cheapest-first-ish
+    with the round-4-missing four up front, streaming e2e last, so any
+    budget cutoff eats the most-proven tail, not fresh surfaces."""
     return {
         "extract_spans": q_extract_spans,
         "dup_components": q_dup_components,
         "bpe_token_stats": q_bpe_token_stats,
         "clean_corpus": q_clean_corpus,
-        "stateful_sessions": q_stateful_sessions,
-        "stream_dedup_wm": q_stream_dedup_wm,
         "ivf_sq_topk": q_ivf_sq_topk,
         "exact_dedup": q_exact_dedup,
         "token_stats": q_token_stats,
@@ -1037,7 +942,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunks": q_doc_chunks,
         "dedup_segments": q_dedup_segments,
         "label_centroids": q_label_centroids,
-        "windowed_counts": q_windowed_counts,
         "simhash": q_simhash,
         "minhash_cand_pairs": q_minhash_cand_pairs,
         "simhash_neardup": q_simhash_neardup,
@@ -1045,7 +949,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_neardup": q_embedding_neardup,
         "stream_extract": q_stream_extract,
         "stream_pdf_extract": q_stream_pdf_extract,
-        "stream_dedup": q_stream_dedup,
     }
 
 
@@ -1201,30 +1104,6 @@ def oracle_sql() -> dict[str, str]:
             FROM embeddings WHERE vec_id != 0
             ORDER BY cosine DESC, vec_id LIMIT 10
         """,
-        "stateful_sessions": """
-            WITH g AS (
-              SELECT user_id, event_id, ts,
-                     lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-              FROM events),
-            f AS (
-              SELECT *, CASE WHEN prev_ts IS NULL
-                              OR epoch(ts) - epoch(prev_ts) > 1800
-                         THEN 1 ELSE 0 END AS new_session
-              FROM g),
-            s AS (
-              SELECT user_id,
-                     sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-              FROM f),
-            agg AS (
-              SELECT user_id, session_seq, cast(count(*) AS int) AS n_events
-              FROM s GROUP BY user_id, session_seq),
-            last AS (SELECT user_id, max(session_seq) AS mx FROM agg GROUP BY user_id)
-            SELECT a.user_id, a.n_events, 'gap' AS closed_by
-            FROM agg a JOIN last l
-              ON a.user_id = l.user_id AND a.session_seq <> l.mx
-            ORDER BY a.user_id, a.n_events
-        """,
         "embedding_neardup": _embedding_neardup_oracle(),
         "bucketed_topk": _bucketed_topk_oracle(),
         # the persisted-index variant serves identical results by
@@ -1351,19 +1230,6 @@ def oracle_sql() -> dict[str, str]:
                                  / ((vmax - vmin) / 255.0)) AS int)
                             END), ',')) AS codes_md5
             FROM m ORDER BY vec_id
-        """,
-        "stream_dedup": """
-            SELECT DISTINCT md5(coalesce(text, '')) AS content_md5,
-                   cast(length(coalesce(text, '')) AS bigint) AS text_len
-            FROM documents ORDER BY content_md5
-        """,
-        "stream_dedup_wm": """
-            SELECT DISTINCT md5(coalesce(text, '')) AS content_md5,
-                   cast(length(coalesce(text, '')) AS bigint) AS text_len,
-                   (cast(1704067200 AS bigint)
-                    + cast(length(coalesce(text, '')) AS bigint) % 3600)
-                   * 1000000 AS t_us
-            FROM documents ORDER BY content_md5
         """,
         "error_click_window": """
             WITH e AS (
@@ -1543,15 +1409,6 @@ def oracle_sql() -> dict[str, str]:
         "dup_components": _dup_components_oracle(),
         "bpe_token_stats": _bpe_oracle(),
         "clean_corpus": _clean_corpus_oracle(),
-        "windowed_counts": """
-            SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-                   event_type,
-                   count(*) AS n_events,
-                   cast(sum(cast(value AS decimal(30,6))) AS double) AS sum_value
-            FROM events
-            GROUP BY window_start, event_type
-            ORDER BY window_start, event_type
-        """,
         "stream_extract": f"""
             SELECT doc_id, status, md_md5
             FROM read_parquet('{_GOLDEN_EXTRACT}')

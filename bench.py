@@ -94,10 +94,7 @@ def run_battery(spark, sf_dir: str) -> dict[str, float]:
     # streaming end-to-end queries measure stream-machinery fixed costs
     # (microbatch planning, checkpoint fsync), not engine throughput —
     # they stay in the CORRECTNESS contract but out of the perf suite.
-    skip = {
-        "extract_spans", "stream_extract", "stream_pdf_extract",
-        "stream_dedup", "stream_dedup_wm", "stateful_sessions",
-    }
+    skip = E.STREAMING_QUERIES | {"extract_spans"}
     times = {}
     from helix_html2md_spark.operators.dedup import release_persisted
 

@@ -51,10 +51,7 @@ def main() -> None:
         shuffle_partitions=max(args.cpus, 8),
     )
 
-    skip = {
-        "extract_spans", "stream_extract", "stream_pdf_extract",
-        "stream_dedup", "stream_dedup_wm", "stateful_sessions",
-    }
+    skip = E.STREAMING_QUERIES | {"extract_spans"}
     all_q = E.queries()
     names = (
         [n.strip() for n in args.queries.split(",") if n.strip()]

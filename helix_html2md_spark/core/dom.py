@@ -1,8 +1,12 @@
 """Lenient HTML -> element-tree parser (hast equivalent).
 
 Re-implements the parse stage of the reference pipeline
-(rehype-parse, /root/reference/package-lock.json:16036) on top of the
-stdlib ``html.parser``.  Produces a minimal hast-like node model:
+(rehype-parse, the reference's package-lock.json:16036).  The product
+path, ``parse_html``, runs ``_fast_parse``: a regex tokenizer with the
+tree building inlined.  ``parse_html_stdlib`` builds the same tree on
+the stdlib ``html.parser``; it is ``parse_html``'s fallback when the
+fast parser raises, and the oracle of tests/test_fast_parser.py.
+Both produce a minimal hast-like node model:
 
     Element(tag, attrs, children)
     Text(value)

@@ -46,16 +46,6 @@ def release_persisted() -> None:
             pass
 
 
-def content_key(col="text") -> Column:
-    """The exact-dedup content hash: md5 of the text with null coalesced
-    to the empty string.  ONE definition shared by the batch operators
-    and both streaming dedup surfaces — the null-coalesce is a contract
-    (a null-text doc must hash, not vanish), and a hand-copied variant
-    drifting (e.g. whitespace normalization added to one copy) would
-    silently break batch/stream agreement."""
-    return F.md5(F.coalesce(col, F.lit("")))
-
-
 def exact_dup_stats(docs: DataFrame) -> DataFrame:
     """Per-source doc counts vs distinct content hashes (exact dedup).
 
@@ -66,7 +56,8 @@ def exact_dup_stats(docs: DataFrame) -> DataFrame:
         docs.groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
-            F.countDistinct(content_key()).alias("n_unique"),
+            F.countDistinct(F.md5(F.coalesce("text", F.lit(""))))
+            .alias("n_unique"),
         )
         .orderBy("source")
     )

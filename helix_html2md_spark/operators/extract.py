@@ -6,9 +6,9 @@ Spark-first design (SURVEY.md §3.4):
   stage, as a native ``_gate_error`` column over the assembled length —
   Catalyst cannot push predicates through an opaque UDF, so we order it
   explicitly (reference size gate: /root/reference/src/index.js:159-166)
-* skew defusal: explicit weight-class repartition — giant documents are
-  round-robined across partitions deterministically (north_rule:
-  "explicitly salted/repartitioned doc_id ranges")
+* placement: ``repartition='hash'`` (the default) spreads rows over the
+  partitions with one shuffle on doc_id; ``'none'`` keeps the input's
+  partitioning, for pre-split (byte-balanced) or streaming input
 * one ``mapInArrow`` crossing per Arrow batch runs the pure-Python
   transform (helix_html2md_spark.core) through ``gate.map_rows`` — no
   per-row Python UDF, no pandas conversion, and the output batch is
@@ -223,8 +223,7 @@ def _validate_defaults(defaults: dict) -> dict:
         raise TypeError(
             "external_prefixes must be a comma-joined string or a list"
         )
-    for key in ("max_images", "max_image_size", "max_html_size",
-                "heavy_bytes"):
+    for key in ("max_images", "max_image_size", "max_html_size"):
         v = out.get(key)
         if v is None:
             continue
@@ -347,7 +346,7 @@ def extract_documents(
     df = prepare_for_extract(df, defaults)
     ok = gate_oversized(df, defaults)
 
-    # ---- explicit skew defusal ------------------------------------------
+    # ---- placement -------------------------------------------------------
     # The transform is a pure map: partitioning only matters for byte
     # balance.  Modes:
     #   none     - input already byte-balanced (parquet/iceberg splits
@@ -355,56 +354,16 @@ def extract_documents(
     #   hash     - (default) one shuffle on doc_id; statistically
     #              balanced when docs/partition is large (law of large
     #              numbers) -- the right default at corpus scale.
-    #   weighted - one extra bucketed-window pass assigns
-    #              weight-class round-robin placement; measured max/mean
-    #              partition-weight: hash 1.89 vs weighted 1.25 on the
-    #              Zipf corpus.  Task count stays == n: mapInArrow waves
-    #              beyond the python worker pool thrash (identity pass
-    #              1.1s @32 tasks vs 7.3s @128 tasks on local[32]).
     n = num_partitions or spark.sparkContext.defaultParallelism
-    heavy_bytes = int(defaults.get("heavy_bytes") or 64 * 1024)
     mode = defaults.get("repartition") or "hash"
     if mode == "none":
         balanced = ok
     elif mode == "hash":
         balanced = ok.repartition(n, "doc_id")
-    elif mode == "weighted":
-        from pyspark.sql import Window
-
-        nbuckets = max(64, n // 4)
-        wclass = F.floor(
-            F.log2(F.greatest(F.col("_html_len"), F.lit(1)))
-        ).cast("int")
-        bucket = F.when(
-            F.col("_html_len") < heavy_bytes,
-            F.pmod(F.xxhash64("doc_id"), F.lit(nbuckets)),
-        ).otherwise(F.lit(0))
-        ok2 = ok.withColumn("_wc", wclass).withColumn("_b", bucket)
-        w = Window.partitionBy("_wc", "_b").orderBy("doc_id")
-        place = F.pmod(
-            F.xxhash64(F.col("_wc"), F.col("_b")) + F.row_number().over(w),
-            F.lit(n),
-        )
-        # repartitionByRange, NOT repartition: hash partitioning would
-        # route the n computed place values through murmur3 (birthday
-        # collisions — ~1/e of partitions get no heavy doc while others
-        # get several), while range partitioning over place in [0, n)
-        # with n partitions APPROXIMATES one place value per partition,
-        # preserving the round-robin the window computed.  Two costs to
-        # be honest about: the range exchange runs a hidden SAMPLING
-        # job that re-executes the post-window projection to sketch
-        # boundaries, and reservoir sampling can merge two sparse
-        # adjacent place values (the 1.25 max/mean figure is empirical
-        # on the Zipf corpus, not structural).
-        balanced = (
-            ok2.withColumn("_place", place)
-            .repartitionByRange(n, "_place")
-            .drop("_wc", "_b", "_place")
-        )
     else:
         raise ValueError(
             f"unknown repartition mode {mode!r}"
-            " (expected 'none', 'hash', or 'weighted')"
+            " (expected 'none' or 'hash')"
         )
 
     return balanced.drop("_html_len").mapInArrow(

@@ -11,12 +11,11 @@ def build_session(
     app_name: str = "helix-html2md-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 64,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Create/get a session.
 
-    * Arrow batches are capped small (64 rows) because a batch of 1 MB
+    * Arrow batches are capped at 64 rows because a batch of 1 MB
       documents must fit in the Python worker (SURVEY.md §4.2).  With the
       Arrow row crossing (operators/gate.py::map_rows), 64, 256 and 1024
       rows per batch measured flat on perfbench's ``small_pages``
@@ -43,9 +42,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records)
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.session.timeZone", "UTC")
         # pinned: the engine's null/overflow contracts are written and
         # oracled under ANSI semantics (size(NULL) = NULL, overflow

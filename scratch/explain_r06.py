@@ -12,8 +12,7 @@ def main():
     names = sys.argv[3].split(",") if len(sys.argv) > 3 else None
     import __spark_entry__ as E
     from helix_html2md_spark.session import build_session
-    skip = {"stream_extract", "stream_pdf_extract", "stream_dedup",
-            "stream_dedup_wm", "stateful_sessions"}
+    skip = E.STREAMING_QUERIES
     spark = build_session("explain-r06", master="local[32]",
                           shuffle_partitions=32)
     d, suffix = os.path.split(out_prefix)

@@ -2,8 +2,7 @@
 
     language gate (langid) -> quality gate (gopher) ->
     exact-substring window dedup -> benchmark decontamination ->
-    LM-perplexity gate (CCNet bigram) -> DSIR selection toward a
-    target -> BPE tokenize to ids -> sequence packing.
+    BPE tokenize to ids -> sequence packing.
 
 Each stage is individually oracled elsewhere; this test pins that the
 stages COMPOSE — schemas line up, every stage's monotone-shrink
@@ -19,14 +18,8 @@ from pyspark.sql import functions as F
 
 from helix_html2md_spark.functions.langid import filter_language
 from helix_html2md_spark.operators.corpus import gopher_filter
-from helix_html2md_spark.operators.lm import (
-    logprob_scores, select_by_logprob, train_bigram_lm,
-)
 from helix_html2md_spark.operators.dedup import (
     decontaminate, drop_dup_window_docs, release_persisted,
-)
-from helix_html2md_spark.operators.dsir import (
-    dsir_log_ratios, dsir_select_frac,
 )
 from helix_html2md_spark.operators.packing import pack_sequences
 from helix_html2md_spark.operators.tokenizer import (
@@ -54,7 +47,7 @@ def test_full_training_pipeline(spark):
         # 0. language gate: monolingual corpus — keep en (plus 'und'
         # for marker-less soup docs the later gates judge on merit).
         # localCheckpoint = the macro-stage boundary a real pipeline
-        # puts here anyway: eight more stages compose on top, and
+        # puts here anyway: five more stages compose on top, and
         # without truncating the lineage the accumulated plan TEXT
         # (rendered by AQE on every update) grows past the driver heap
         docs = filter_language(pool, keep=("en", "und")).localCheckpoint()
@@ -88,43 +81,24 @@ def test_full_training_pipeline(spark):
         # must be gone now
         assert stage3.filter("doc_id >= 490").count() == 0
 
-        # 3b. LM-perplexity gate (CCNet shape): score against a
-        # reference LM trained on src0 and keep the head
-        lm = train_bigram_lm(docs.filter("source = 'src0'"))
-        scores = logprob_scores(stage3, lm)
-        thresh = scores.agg(
-            F.expr("percentile_approx(avg_logp_milli, 0.25)")
-        ).collect()[0][0]
-        stage3b = select_by_logprob(stage3, scores, int(thresh))
-        n3b = stage3b.count()
-        assert 0 < n3b <= n3
-
-        # 4. DSIR: keep the half most src0-like
-        ratios = dsir_log_ratios(
-            stage3b, docs.filter("source = 'src0'"), n=2, buckets=512
-        )
-        stage4 = dsir_select_frac(stage3b, ratios, keep_frac=0.5)
-        n4 = stage4.count()
-        assert 0 < n4 <= n3b
-
-        # 5. tokenize to trainer ids
-        merges = train_bpe(stage4, num_merges=128)
-        vocab = bpe_vocab(corpus_alphabet(stage4), merges)
-        toks = bpe_encode(stage4, merges, vocab=vocab)
+        # 4. tokenize to trainer ids
+        merges = train_bpe(stage3, num_merges=128)
+        vocab = bpe_vocab(corpus_alphabet(stage3), merges)
+        toks = bpe_encode(stage3, merges, vocab=vocab)
         tok_rows = toks.count()
-        assert tok_rows == n4
+        assert tok_rows == n3
         # training-corpus vocabulary closure: zero unknown ids
         assert toks.agg(F.sum("n_unk")).collect()[0][0] == 0
 
-        # 6. pack into 512-token sequences (whitespace token budget —
+        # 5. pack into 512-token sequences (whitespace token budget —
         # pack_sequences' own unit; the ids stream rides along by id)
-        packed = pack_sequences(stage4, seq_len=512)
+        packed = pack_sequences(stage3, seq_len=512)
         rows = packed.select(
             "doc_id", "pack_id", "offset_in_pack"
         ).collect()  # materialize BEFORE release (lifetime contract)
-        assert len(rows) == n4
+        assert len(rows) == n3
         assert {r["doc_id"] for r in rows} == {
-            r["doc_id"] for r in stage4.select("doc_id").collect()
+            r["doc_id"] for r in stage3.select("doc_id").collect()
         }
         assert all(
             0 <= r["offset_in_pack"] < 512 and r["pack_id"] >= 0

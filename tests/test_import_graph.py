@@ -4,8 +4,8 @@ Every ``helix_html2md_spark`` module must be imported, directly or
 transitively, from the extraction path, the spark-submit job, the
 benchmark or the driver entry (``__spark_entry__.py``, whose queries
 are the side battery); a module none of them reaches is dead code.
-Four battery operators that only their own tests use are listed by
-name and may not be joined by others.
+One battery operator that only its own tests use is listed by name and
+may not be joined by others.
 The bench scripts may import only modules those roots already reach,
 so they cannot keep a module alive on their own.
 
@@ -33,12 +33,7 @@ ROOT_SCRIPTS += sorted((ROOT / "perfbench").glob("*.py"))
 BENCH_SCRIPTS = [ROOT / "bench.py", ROOT / "bench_extra.py"]
 # battery operators that only their own tests import; this list may only
 # shrink (a module leaves it when it is deleted with its tests)
-TESTED_ONLY = {
-    f"{PKG}.functions.pii",
-    f"{PKG}.operators.dsir",
-    f"{PKG}.operators.lm",
-    f"{PKG}.operators.tokenizer",
-}
+TESTED_ONLY = {f"{PKG}.operators.tokenizer"}
 
 
 def _package_modules() -> dict[str, Path]:

@@ -38,10 +38,6 @@ def test_region_rollup_broadcasts_dims(spark):
     assert "SortMergeJoin" not in plan
 
 
-# streaming queries execute a job when called — no lazy plan to inspect
-_STREAMING_QUERIES = {
-    "stream_extract", "stream_pdf_extract", "stream_dedup", "stream_dedup_wm",
-}
 # queries whose ONE intentional Python crossing is a gated mapInArrow
 # (extraction, PDF parse, boilerplate strip) or mapInPandas (centroid
 # map-side partials); everything else in the battery must stay pure JVM
@@ -62,7 +58,7 @@ def test_battery_queries_stay_jvm_side(spark):
     import __spark_entry__ as E
 
     for name, fn in E.queries().items():
-        if name in _STREAMING_QUERIES:
+        if name in E.STREAMING_QUERIES:
             continue
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert "FlatMapGroupsInPandas" not in plan, name
@@ -157,3 +153,6 @@ def test_driver_contract_holds_the_50_query_line():
         "missing_oracle": sorted(set(q) - set(o)),
         "orphan_oracle": sorted(set(o) - set(q)),
     }
+    # the hand-kept name sets cannot outlive a query they name
+    assert E.STREAMING_QUERIES <= set(q), sorted(E.STREAMING_QUERIES - set(q))
+    assert _MAP_IN_PYTHON_OK <= set(q), sorted(_MAP_IN_PYTHON_OK - set(q))

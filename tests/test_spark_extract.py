@@ -111,27 +111,6 @@ def test_hostile_docs_degrade_per_row(spark):
     assert "RecursionError" in out["deep"]["error"]
 
 
-def test_weighted_placement_mode(spark):
-    """The explicit weight-class round-robin mode produces the same rows
-    as the default hash mode (placement only changes partitioning)."""
-    from helix_html2md_spark.sources.synthetic import synthetic_documents
-
-    docs = synthetic_documents(spark, 30, seed=5, partitions=2)
-    a = {
-        r["doc_id"]: r["md"]
-        for r in extract_documents(
-            docs, None, num_partitions=4, defaults={"repartition": "weighted"}
-        ).collect()
-    }
-    b = {
-        r["doc_id"]: r["md"]
-        for r in extract_documents(
-            docs, None, num_partitions=4, defaults={"repartition": "none"}
-        ).collect()
-    }
-    assert a == b and len(a) == 30
-
-
 def test_malformed_source_url_degrades_per_row(spark):
     """Config parsing + media-lookup construction are per-row code: a
     malformed source_url ('http://[' raises Invalid IPv6 URL inside
@@ -258,7 +237,7 @@ def test_invalid_defaults_fail_at_driver(spark):
         defaults={"external_prefixes": ["https://cdn."]},
     ).collect()
     assert out[0]["status"] == "ok"
-    # an explicit None mode means "the default", not weighted
+    # an explicit None mode means the default (hash), not an unknown mode
     out2 = extract_documents(
         docs, None, num_partitions=1, defaults={"repartition": None}
     ).collect()

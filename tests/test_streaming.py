@@ -1,12 +1,10 @@
-"""Structured Streaming: incremental extraction with exactly-once resume,
-and watermarked windowed aggregation."""
+"""Structured Streaming: incremental HTML and PDF extraction with
+exactly-once resume."""
 
 from pyspark.sql import functions as F
 
 from helix_html2md_spark.sources.synthetic import synthetic_documents
-from helix_html2md_spark.streaming.stream import (
-    stream_extract, windowed_event_counts,
-)
+from helix_html2md_spark.streaming.stream import stream_extract
 
 
 def test_stream_extract_incremental(spark, tmp_path):
@@ -32,25 +30,6 @@ def test_stream_extract_incremental(spark, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == 16
     assert final.select("doc_id").distinct().count() == 16
-
-
-def test_windowed_event_counts(spark, tmp_path):
-    events = spark.createDataFrame(
-        [
-            {"event_id": 1, "ts": "2026-01-01 00:01:00", "user_id": 1,
-             "event_type": "click", "value": 1.0},
-            {"event_id": 2, "ts": "2026-01-01 00:05:00", "user_id": 1,
-             "event_type": "click", "value": 2.0},
-            {"event_id": 3, "ts": "2026-01-01 00:15:00", "user_id": 2,
-             "event_type": "view", "value": 3.0},
-        ]
-    ).withColumn("ts", F.to_timestamp("ts"))
-    rows = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in windowed_event_counts(events).collect()
-    }
-    assert rows[("2026-01-01 00:00:00", "click")] == 2
-    assert rows[("2026-01-01 00:10:00", "view")] == 1
 
 
 def test_stream_pdf_extract_incremental(spark, tmp_path):
@@ -93,94 +72,3 @@ def test_stream_pdf_extract_incremental(spark, tmp_path):
     }
     for r in batch.collect():
         assert got[r["doc_id"]] == [tuple(s) for s in r["spans"]]
-
-
-def test_stream_dedup_suppresses_across_restarts(spark, tmp_path):
-    """The dedup state lives in the checkpoint: content seen in run 1
-    is still suppressed when it reappears in new files during run 2."""
-    from helix_html2md_spark.streaming.stream import stream_dedup
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    rows1 = [
-        (1, "alpha text", "en", "s", 10),
-        (2, "beta text", "en", "s", 9),
-        (3, "alpha text", "en", "s", 10),  # dup within the batch
-    ]
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    spark.createDataFrame(rows1, schema).write.mode("append").parquet(inp)
-    q = stream_dedup(spark, inp, out, ckpt)
-    q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 2
-
-    # run 2: one genuinely new content + one dup of run 1's content
-    rows2 = [
-        (4, "gamma text", "en", "s", 10),
-        (5, "beta text", "en", "s", 9),  # dup ACROSS runs
-    ]
-    spark.createDataFrame(rows2, schema).write.mode("append").parquet(inp)
-    q2 = stream_dedup(spark, inp, out, ckpt)
-    q2.awaitTermination(120)
-    final = spark.read.parquet(out)
-    assert final.count() == 3
-    assert final.select("content_md5").distinct().count() == 3
-
-
-def test_stream_dedup_wm_bounded_state(spark, tmp_path):
-    """Watermarked dedup: (a) duplicates within the watermark window are
-    suppressed across restarts; (b) state is EVICTED once the watermark
-    passes expiry, so a far-late duplicate re-emits — the bounded-state
-    tradeoff stream_dedup_wm exists to make."""
-    from datetime import datetime, timedelta
-
-    from helix_html2md_spark.streaming.stream import stream_dedup_wm
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-    schema = (
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long, ts timestamp"
-    )
-
-    def land(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(inp)
-
-    def run():
-        q = stream_dedup_wm(
-            spark, inp, out, ckpt, delay="10 minutes"
-        )
-        q.awaitTermination(120)
-
-    # run 1: a dup inside one batch is suppressed
-    land([
-        (1, "alpha", "en", "s", 5, t0),
-        (2, "beta", "en", "s", 4, t0 + timedelta(minutes=1)),
-        (3, "alpha", "en", "s", 5, t0 + timedelta(minutes=2)),
-    ])
-    run()
-    assert spark.read.parquet(out).count() == 2
-
-    # run 2 (restart, same checkpoint): dup of run-1 content within the
-    # watermark window is still suppressed — state survived the restart
-    land([(4, "alpha", "en", "s", 5, t0 + timedelta(minutes=5))])
-    run()
-    assert spark.read.parquet(out).count() == 2
-
-    # run 3: advance event time far past alpha's expiry (ts + 10 min)
-    land([(5, "gamma", "en", "s", 5, t0 + timedelta(hours=6))])
-    run()
-    # run 4: alpha reappears with a fresh event time — its old state was
-    # evicted by the advanced watermark, so it re-emits (bounded state)
-    land([(6, "alpha", "en", "s", 5, t0 + timedelta(hours=6, minutes=1))])
-    run()
-    final = spark.read.parquet(out)
-    assert final.count() == 4
-    alpha_md5 = __import__("hashlib").md5(b"alpha").hexdigest()
-    assert (
-        final.filter(final.content_md5 == alpha_md5).count() == 2
-    )  # emitted once per watermark era, not once per corpus lifetime
