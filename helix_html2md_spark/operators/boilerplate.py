@@ -75,16 +75,11 @@ def strip_boilerplate_documents(
     # octet_length: the budget bounds Python-worker/Arrow batch MEMORY,
     # so it is a byte limit (F.length counts characters — a multibyte
     # CJK page would cross at up to 4x the stated budget)
-    too_big = F.octet_length("html") > F.lit(max_html_size)
     gated = apply_gate(
         docs.select("doc_id", "html"),  # prune before the Arrow crossing
         [(
-            too_big,
-            F.concat(
-                F.lit("html larger than "),
-                F.lit(max_html_size).cast("string"),
-                F.lit(" bytes"),
-            ),
+            F.expr(f"octet_length(html) > {max_html_size}"),
+            f"html larger than {max_html_size} bytes",
         )],
         {"html": F.lit("")},
     )

@@ -63,6 +63,14 @@ _CONFIG_COLS = (
     "boilerplate_fallback",
 )
 
+# JVM-side span assembly as SQL lambdas (see prepare_for_extract)
+_HTML_SRC = (
+    "array_join(transform(array_sort(filter(spans, s -> s.kind = 'html'),"
+    " (a, b) -> CASE WHEN a.offset < b.offset THEN -1"
+    " WHEN a.offset > b.offset THEN 1 ELSE 0 END), s -> s.text), '')"
+)
+_MEDIA_SPANS = "filter(spans, s -> s.kind = 'media')"
+
 _DEF_RE = re.compile(r"^\[(image\d+)\]: (.*)$", re.M)
 _REF_RE = re.compile(r"!\[[^\]\n]*\]\[(image\d+)\]")
 
@@ -243,31 +251,26 @@ def prepare_for_extract(df: DataFrame, defaults: dict) -> DataFrame:
     spans ride along as a (small) separate array.  Handing Python two
     flat columns instead of the full nested array<struct> keeps the
     Arrow crossing cheap (nested structs materialize per-row python
-    objects).
+    objects).  The derived columns come from one ``withColumns`` and one
+    ``select`` (``_html_len`` reads the assembled ``html_src``) and the
+    higher-order functions are SQL lambdas: a ``withColumn`` per column
+    re-analysed the plan each time, and each Python lambda cost py4j
+    round trips, for the same optimized plan.
     """
     defaults = _validate_defaults(defaults)
-    for c in _CONFIG_COLS:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(defaults.get(c)))
-        elif c in defaults:
-            df = df.withColumn(c, F.coalesce(F.col(c), F.lit(defaults[c])))
-    html_spans = F.array_sort(
-        F.filter("spans", lambda s: s["kind"] == F.lit("html")),
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1)
-        .otherwise(0),
-    )
-    return (
-        df.withColumn(
-            "html_src",
-            F.array_join(F.transform(html_spans, lambda s: s["text"]), ""),
-        )
-        .withColumn(
-            "media_spans",
-            F.filter("spans", lambda s: s["kind"] == F.lit("media")),
-        )
-        .drop("spans")
-        .withColumn("_html_len", F.length("html_src"))
+    names = df.columns
+    assembled = {
+        c: F.coalesce(F.col(c), F.lit(defaults[c]))
+        if c in names else F.lit(defaults.get(c))
+        for c in _CONFIG_COLS
+        if c not in names or c in defaults
+    }
+    assembled["html_src"] = F.expr(_HTML_SRC)
+    assembled["media_spans"] = F.expr(_MEDIA_SPANS)
+    df = df.withColumns(assembled)
+    return df.select(
+        *[c for c in df.columns if c != "spans"],
+        F.expr("length(html_src) AS _html_len"),
     )
 
 
@@ -292,30 +295,20 @@ def gate_oversized(df: DataFrame, defaults: dict) -> DataFrame:
     # row-level 0 with a job default other than 1MB resolves to the
     # job default here but to the library's 1MB in extract_row,
     # and the two tiers disagree about admission.
-    df = df.withColumn(
-        "max_html_size",
-        F.when(
-            F.col("max_html_size").isNull() | (F.col("max_html_size") <= 0),
-            F.lit(max_html_default),
-        )
-        .otherwise(F.col("max_html_size"))
-        .cast("long"),
+    limit = F.expr(
+        "CAST(CASE WHEN max_html_size IS NULL OR max_html_size <= 0"
+        f" THEN {max_html_default} ELSE max_html_size END AS BIGINT)"
     )
-    limit = F.col("max_html_size")
-    mb_str = (
-        F.bround(limit / F.lit(1024 * 1024), 0)
-        .cast("decimal(20,0)")
-        .cast("string")
-    )
-    err = F.concat(
-        F.lit("html source larger than "), mb_str, F.lit("MB")
+    err = F.expr(
+        "concat('html source larger than ', CAST(CAST(bround(max_html_size"
+        f" / {1024 * 1024}, 0) AS DECIMAL(20,0)) AS STRING), 'MB')"
     )
     return apply_gate(
-        df,
-        [(F.col("_html_len") > limit, err)],
+        df.withColumns({"max_html_size": limit}),
+        [(F.expr("_html_len > max_html_size"), err)],
         {
             "html_src": F.lit(""),
-            "media_spans": F.filter("media_spans", lambda s: F.lit(False)),
+            "media_spans": F.expr("filter(media_spans, s -> false)"),
         },
     )
 

@@ -50,13 +50,13 @@ def apply_gate(
         err = F.when(cond, msg_col) if err is None else err.when(cond, msg_col)
     if err is None:
         raise ValueError("apply_gate needs at least one condition")
-    df = df.withColumn("_gate_error", err)
-    rejected = F.col("_gate_error").isNotNull()
-    for name, blank_val in blank.items():
-        df = df.withColumn(
-            name, F.when(rejected, blank_val).otherwise(F.col(name))
-        )
-    return df
+    # two projections, as Catalyst keeps them: the blanking reads the
+    # stamped column instead of repeating the gate expression per column
+    rejected = F.expr("_gate_error IS NOT NULL")
+    return df.withColumn("_gate_error", err).withColumns({
+        name: F.when(rejected, blank_val).otherwise(F.col(name))
+        for name, blank_val in blank.items()
+    })
 
 
 def map_rows(

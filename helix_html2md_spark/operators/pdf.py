@@ -95,26 +95,22 @@ def parse_pdf_documents(
     Python stage, and blanking rejected payloads JVM-side keeps dead
     bytes off the Arrow channel entirely.
     """
-    magic_ok = F.expr(f"substring(payload, 1, 5) = X'{_MAGIC}'")
-    too_big = F.length("payload") > F.lit(max_pdf_size)
     # a NULL payload must be gated EXPLICITLY and FIRST: the other
     # predicates evaluate to NULL for it (skipped branches), so without
     # this condition it slipped through un-blanked and surfaced as a
     # misleading Python-side parse_error
-    is_null = F.col("payload").isNull()
     gated = apply_gate(
         pdfs.select("doc_id", "payload"),  # prune before Arrow
         [
-            (is_null, "payload missing"),
+            (F.expr("payload IS NULL"), "payload missing"),
             (
-                too_big,
-                F.concat(
-                    F.lit("pdf larger than "),
-                    F.lit(max_pdf_size).cast("string"),
-                    F.lit(" bytes"),
-                ),
+                F.expr(f"length(payload) > {max_pdf_size}"),
+                f"pdf larger than {max_pdf_size} bytes",
             ),
-            (~magic_ok, "not a PDF (missing %PDF- magic)"),
+            (
+                F.expr(f"NOT substring(payload, 1, 5) = X'{_MAGIC}'"),
+                "not a PDF (missing %PDF- magic)",
+            ),
         ],
         {"payload": F.lit(b"")},
     )

@@ -1,13 +1,18 @@
-"""Spark-free tests of the Arrow row crossing (operators/gate.py::map_rows)
-through each operator's batch function, on hand-built RecordBatches.
+"""Tests of the shared gate (operators/gate.py).
 
-The error rows are pinned literally: status, error text, zero counts and
-empty payload columns are part of the output contract."""
+The Arrow row crossing (``map_rows``) is driven without Spark through
+each operator's batch function, on hand-built RecordBatches; the error
+rows are pinned literally: status, error text, zero counts and empty
+payload columns are part of the output contract.  The JVM half
+(``apply_gate``) is pinned on the session fixture: its column order, its
+blanking and how a NULL predicate is routed."""
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 
 from helix_html2md_spark.operators import boilerplate, extract, pdf
+from helix_html2md_spark.operators.gate import apply_gate
 from helix_html2md_spark.sources.pdfgen import synth_pdf
 
 MEDIA = pa.list_(
@@ -195,3 +200,41 @@ def test_all_null_gate_column(fn, schema):
     (ungated,) = _run(fn, _batch(schema, [row]))
     assert gated.column("status")[0].as_py() != "constraint_error"
     assert gated.equals(ungated)
+
+
+def test_apply_gate_columns_blanking_and_null_predicates(spark):
+    """First true predicate wins, a NULL predicate falls through to the
+    next condition, rejected rows get every ``blank`` column blanked,
+    and ``_gate_error`` is appended after the input columns in order."""
+    df = spark.createDataFrame(
+        [
+            ("ok", "abc", 1),
+            ("long", "abcdefgh", -2),  # two conditions hold: the first wins
+            ("negative", "ab", -1),
+            ("null_text", None, 3),  # length(NULL) > 5 is NULL: falls through
+            ("null_n", "abc", None),  # every predicate false or NULL
+        ],
+        "doc_id string, text string, n int",
+    )
+    out = apply_gate(
+        df,
+        [
+            (F.length("text") > 5, "too long"),
+            (
+                F.col("n") < 0,
+                F.concat(F.lit("negative "), F.col("n").cast("string")),
+            ),
+            (F.col("text").isNull(), "missing"),
+        ],
+        {"n": F.lit(0), "text": F.lit("")},
+    )
+    assert out.columns == ["doc_id", "text", "n", "_gate_error"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("long", "", 0, "too long"),
+        ("negative", "", 0, "negative -1"),
+        ("null_n", "abc", None, None),
+        ("null_text", "", 0, "missing"),
+        ("ok", "abc", 1, None),
+    ]
+    with pytest.raises(ValueError, match="at least one condition"):
+        apply_gate(df, [], {"text": F.lit("")})
