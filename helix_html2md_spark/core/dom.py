@@ -3,10 +3,12 @@
 Re-implements the parse stage of the reference pipeline
 (rehype-parse, the reference's package-lock.json:16036).  The product
 path, ``parse_html``, runs ``_fast_parse``: a regex tokenizer with the
-tree building inlined.  ``parse_html_stdlib`` builds the same tree on
-the stdlib ``html.parser``; it is ``parse_html``'s fallback when the
-fast parser raises, and the oracle of tests/test_fast_parser.py.
-Both produce a minimal hast-like node model:
+tree building inlined.  There is no fallback parser: an exception in
+the parser reaches the caller, and the extraction and boilerplate row
+functions turn it into a ``parse_error`` row.  The tree is pinned
+against a stdlib ``html.parser`` builder, the oracle of
+tests/test_fast_parser.py (tests/stdlib_parser_oracle.py).  The node
+model is minimal and hast-like:
 
     Element(tag, attrs, children)
     Text(value)
@@ -20,7 +22,6 @@ from __future__ import annotations
 
 import re
 from collections import deque
-from html.parser import HTMLParser
 
 
 class Text:
@@ -140,81 +141,10 @@ _P_CLOSERS = {
 }
 
 
-class _TreeBuilder(HTMLParser):
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.root = Element("#root")
-        self.stack: list[Element] = [self.root]
-
-    # -- helpers ------------------------------------------------------
-    def _cur(self) -> Element:
-        return self.stack[-1]
-
-    def _close_implied(self, tag: str):
-        # close <p> when a block tag opens
-        if tag in _P_CLOSERS:
-            for i in range(len(self.stack) - 1, 0, -1):
-                if self.stack[i].tag == "p":
-                    del self.stack[i:]
-                    break
-                if self.stack[i].tag in ("td", "th", "li", "caption"):
-                    break
-        closes = _IMPLIED_CLOSE.get(tag)
-        if closes:
-            # scan THROUGH open formatting elements (an unclosed <b>
-            # inside a cell must not defeat the implied td/tr/li close —
-            # browsers close the cell regardless); anything non-
-            # formatting is a scope boundary and blocks the close
-            while True:
-                i = len(self.stack) - 1
-                while i > 0 and self.stack[i].tag in _FORMATTING:
-                    i -= 1
-                if i > 0 and self.stack[i].tag in closes:
-                    del self.stack[i:]
-                    continue
-                break
-
-    # -- parser callbacks ----------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        tag = tag.lower()
-        self._close_implied(tag)
-        el = Element(tag, attrs)
-        self._cur().append(el)
-        if tag not in VOID:
-            self.stack.append(el)
-
-    def handle_startendtag(self, tag, attrs):
-        tag = tag.lower()
-        self._close_implied(tag)
-        self._cur().append(Element(tag, attrs))
-
-    def handle_endtag(self, tag):
-        tag = tag.lower()
-        if tag in VOID:
-            return
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                return
-        # stray close tag: ignore
-
-    def handle_data(self, data):
-        if data:
-            self._cur().append(Text(data))
-
-
-def parse_html_stdlib(html: str) -> Element:
-    """Reference tree builder on stdlib html.parser (slow path / oracle)."""
-    p = _TreeBuilder()
-    p.feed(html)
-    p.close()
-    return p.root
-
-
 # ---------------------------------------------------------------------------
-# fast regex tokenizer (same tree shape; ~2x the stdlib parser's speed).
-# Differentially tested against parse_html_stdlib (tests/test_fast_parser.py)
-# and falls back to it on any internal error.
+# fast regex tokenizer (same tree shape as the stdlib html.parser builder
+# in tests/stdlib_parser_oracle.py, at ~2x its speed; differentially
+# tested by tests/test_fast_parser.py).
 # ---------------------------------------------------------------------------
 
 _TAG_RE = re.compile(
@@ -259,7 +189,8 @@ from html import unescape as _unescape  # noqa: E402 - hot-path binding
 def _fast_parse(html: str) -> Element:
     # The tree-building is inlined (no _TreeBuilder method dispatch, no
     # re-lowercasing of the already-lowered tag name): byte-identical
-    # trees to parse_html_stdlib, pinned by tests/test_fast_parser.py.
+    # trees to the oracle's parse_html_stdlib
+    # (tests/stdlib_parser_oracle.py), pinned by tests/test_fast_parser.py.
     unescape = _unescape
     tag_match = _TAG_RE.match
     attr_finditer = _ATTR_RE.finditer
@@ -386,7 +317,4 @@ def _fast_parse(html: str) -> Element:
 
 def parse_html(html: str) -> Element:
     """Parse an HTML string into an element tree; returns the root."""
-    try:
-        return _fast_parse(html)
-    except Exception:  # pragma: no cover - safety net
-        return parse_html_stdlib(html)
+    return _fast_parse(html)

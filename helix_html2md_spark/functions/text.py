@@ -17,8 +17,7 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 # [ \t\n\x0B\f\r] while RE2 (DuckDB) EXCLUDES vertical tab \x0B — a
 # document containing \x0B would tokenize differently on the two sides
 # of the oracle.  Python's re \s is Unicode-aware and differs from BOTH
-# (NBSP etc.), so driver-side query tokenization must use this class
-# too (operators/search.py).
+# (NBSP etc.), so any Python-side tokenization must use this class too.
 WS_CLASS = r"[ \t\n\x0B\f\r]"
 
 
@@ -156,9 +155,9 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quantized_idf(n_docs: int, df_col: str = "df"):
     """Integer-quantized idf ``(1000 * n_docs) div df`` — the ONE home
-    of the cross-engine tfidf quantization (corpus.tfidf_top_terms and
-    search.py's ranked serving both call it, so the "same
-    integer-exact idf" contract can't drift).  n_docs is cast to
+    of the cross-engine tfidf quantization (corpus.tfidf_top_terms calls
+    it and the DuckDB oracle mirrors it, so the "same integer-exact idf"
+    contract can't drift).  n_docs is cast to
     BIGINT inside the expression: Spark parses a bare 3_000_000
     literal as INT and ``1000 * INT`` overflows int32 at ~2.1M docs
     (ANSI throws, legacy wraps negative) — the 100 TB corpus this

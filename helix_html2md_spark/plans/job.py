@@ -94,11 +94,11 @@ def run_extract_job(
     import uuid
 
     attempt_id = uuid.uuid4().hex
-    extracted = (
-        extracted.withColumn("partition_id", F.spark_partition_id())
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt_id", F.lit(attempt_id))
-    )
+    extracted = extracted.withColumns({
+        "partition_id": F.spark_partition_id(),
+        "run_id": F.lit(run_id),
+        "attempt_id": F.lit(attempt_id),
+    })
 
     # persist so the lineage aggregate AND the write share one
     # extraction pass.  The alternative — re-reading output_path and
@@ -158,11 +158,12 @@ def _attempt_lineage(
         .agg(
             F.count("*").alias("doc_ids_done"),
             F.sum(
-                F.when(F.col("status") != "ok", 1).otherwise(0)
+                F.when(F.expr("status != 'ok'"), 1).otherwise(0)
             ).alias("docs_failed"),
             F.sum("n_chars").alias("chars_out"),
             F.sum(F.size("spans")).alias("span_count"),
         )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt_id", F.lit(attempt_id))
+        .withColumns(
+            {"run_id": F.lit(run_id), "attempt_id": F.lit(attempt_id)}
+        )
     )

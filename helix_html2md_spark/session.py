@@ -46,8 +46,8 @@ def build_session(
       rows per batch measured flat on perfbench's ``small_pages``
       (median docs/s 3039 / 2800 / 2952, three runs each, 4-vCPU VM),
       so the cap stays at 64 for that memory bound.
-    * AQE on: runtime coalescing + skew-join handling for the relational
-      side-queries.
+    * AQE on: runtime coalescing + skew-join handling for the battery's
+      joins (dedup bucket self-joins, corpus term-keyed joins).
     * Python workers start from :mod:`.worker_daemon`, which imports the
       installed, bytecode-cached pyspark instead of Spark's
       ``pyspark.zip``: on a 4-vCPU VM that cut the first one-row

@@ -44,7 +44,7 @@ def list_typed_cols(pdf):
     """Columns carrying list/array payloads — the DRIVER's canon
     (pandas sort_values over raw objects) crashes on these with
     'unhashable type: list' even though this sim's canon handles them
-    (round-3 label_centroids red row).  Any such column is a contract
+    (a round-3 red row: a raw centroid array).  Any such column is a contract
     bug: hash the array to md5 instead."""
     import numpy as np
 

@@ -1,5 +1,5 @@
-"""Repro-check the round-5 review-finding fixes (relational/centroids/
-packing/boilerplate).  Run: python scratch/r5_fixes_check.py"""
+"""Repro-check the round-5 review-finding fixes (packing/boilerplate).
+Run: python scratch/r5_fixes_check.py"""
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -7,48 +7,12 @@ from helix_html2md_spark.session import build_session  # noqa: E402
 
 spark = build_session("r5fix", master="local[4]", shuffle_partitions=8)
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from helix_html2md_spark.operators.relational import asof_join  # noqa: E402
-from helix_html2md_spark.operators.centroids import label_centroids  # noqa: E402
 from helix_html2md_spark.operators.packing import pack_sequences  # noqa: E402
 from helix_html2md_spark.core.boilerplate import strip_boilerplate  # noqa: E402
 
 fails = []
 
-# 1) asof_join: null right ts must not match; null by keys must not pair
-left = spark.createDataFrame([(1, 10), (None, 10)], "k int, t int")
-right = spark.createDataFrame(
-    [(1, None, "rNULL"), (None, 5, "r5")], "k int, t int, rv string"
-)
-out = {tuple(r) for r in asof_join(
-    left, right, by="k", on="t", value_cols=["rv"]
-).collect()}
-exp = {(1, 10, None, None), (None, 10, None, None)}
-if out != exp:
-    fails.append(f"asof null semantics: {out}")
-
-# positive path still matches
-right2 = spark.createDataFrame([(1, 5, "r5")], "k int, t int, rv string")
-out2 = asof_join(left, right2, by="k", on="t", value_cols=["rv"]).collect()
-m = {r["k"]: r["asof_rv"] for r in out2}
-if m != {1: "r5", None: None}:
-    fails.append(f"asof positive: {m}")
-
-# 2) label_centroids: null label -> null GROUP in both variants
-emb = spark.createDataFrame(
-    [(1, [1.0, 2.0]), (None, [3.0, 4.0]), (1, [3.0, 2.0])],
-    "label int, embedding array<double>",
-)
-for partial in (False, True):
-    rows = {r["label"]: r for r in label_centroids(emb, partial=partial).collect()}
-    if set(rows) != {1, None}:
-        fails.append(f"centroids partial={partial}: groups {set(rows)}")
-        continue
-    if rows[1]["centroid"] != [2.0, 2.0] or rows[None]["centroid"] != [3.0, 4.0]:
-        fails.append(f"centroids partial={partial}: values {rows}")
-
-# 3) pack_sequences: all-null-text docs must not crash, get 0-token slots
+# 1) pack_sequences: all-null-text docs must not crash, get 0-token slots
 docs = spark.createDataFrame(
     [("d0", None), ("d1", None), ("d2", "one two three")],
     "doc_id string, text string",
@@ -61,7 +25,7 @@ if rows["d2"]["offset_in_pack"] != 0 or rows["d2"]["pack_id"] != 0:
 from helix_html2md_spark.operators.dedup import release_persisted  # noqa: E402
 release_persisted()
 
-# 4) _text: inline tags mid-word concatenate verbatim; blocks stay apart
+# 2) _text: inline tags mid-word concatenate verbatim; blocks stay apart
 html = ("<html><body><div id='c'><p>This paragraph is re<b>mark</b>able, "
         "truly and completely remarkable stuff</p>"
         "<p>glued</p><p>blocks, separated by boundaries as they must be, "
@@ -72,7 +36,7 @@ if "re mark able" in out["content_text"] or "remarkable" not in out["content_tex
 if "gluedblocks" in out["content_text"]:
     fails.append(f"_text block glue: {out['content_text']!r}")
 
-# 5) _NOISE_HINT: 'downloads' subtree survives; real nav/ads still die
+# 3) _NOISE_HINT: 'downloads' subtree survives; real nav/ads still die
 html2 = ("<html><body><div class='downloads'><p>a long real content "
          "paragraph, with a comma, living inside a downloads class</p>"
          "</div></body></html>")
@@ -88,7 +52,7 @@ for cls in ("main-nav", "ads", "ad-break", "navbar", "sidebar"):
     if "noisy chrome" in o["content_text"]:
         fails.append(f"noise {cls} survived: {o['content_text']!r}")
 
-# 6) octet_length gate: multibyte page beyond byte budget is rejected
+# 4) octet_length gate: multibyte page beyond byte budget is rejected
 from helix_html2md_spark.operators.boilerplate import (  # noqa: E402
     strip_boilerplate_documents,
 )

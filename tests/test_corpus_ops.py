@@ -88,166 +88,6 @@ def test_hash_sample_shuffle_free_predicate(spark):
     assert plan.count("Exchange") <= 2
 
 
-# --- as-of join (operators/relational.py) -----------------------------------
-
-
-def test_asof_join_semantics(spark):
-    from helix_html2md_spark.operators.relational import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 10, "l1"), (1, 20, "l2"), (2, 5, "l3")],
-        "k long, t long, lval string",
-    )
-    right = spark.createDataFrame(
-        [(1, 10, "r10"), (1, 15, "r15"), (3, 1, "r1")],
-        "k long, t long, rval string",
-    )
-    strict = {
-        r["lval"]: r["asof_rval"]
-        for r in asof_join(
-            left, right, by="k", on="t", value_cols=["rval"]
-        ).collect()
-    }
-    # strictly-prior: l1@10 must NOT see r10@10; l2@20 sees r15;
-    # k=2 has no right rows at all -> NULL
-    assert strict == {"l1": None, "l2": "r15", "l3": None}
-    loose = {
-        r["lval"]: r["asof_rval"]
-        for r in asof_join(
-            left, right, by="k", on="t", value_cols=["rval"],
-            strict=False,
-        ).collect()
-    }
-    assert loose == {"l1": "r10", "l2": "r15", "l3": None}
-
-
-def test_asof_join_single_shuffle(spark):
-    from helix_html2md_spark.operators.relational import asof_join
-
-    left = spark.createDataFrame([(1, 10, "a")], "k long, t long, v string")
-    right = spark.createDataFrame([(1, 5, "b")], "k long, t long, w string")
-    plan = (
-        asof_join(left, right, by="k", on="t", value_cols=["w"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # union-tag shape: no join operator at all, one hash exchange for
-    # the window (per side of the union pre-shuffle)
-    assert "Join" not in plan
-    assert "Window" in plan
-
-
-def test_interval_join_matches_naive(spark):
-    from helix_html2md_spark.operators.relational import interval_join
-
-    left = spark.createDataFrame(
-        [(1, 100, "e1"), (1, 200, "e2"), (2, 100, "e3")],
-        "k long, t long, lv string",
-    )
-    right = spark.createDataFrame(
-        [(1, 60, "c1"), (1, 95, "c2"), (1, 100, "c3"), (1, 199, "c4"),
-         (2, 150, "c5")],
-        "k long, t long, rv string",
-    )
-    out = interval_join(
-        left, right, by="k", on="t", low=-40, high=0, value_cols=["rv"]
-    ).collect()
-    got = sorted((r["lv"], r["match_rv"]) for r in out)
-    # e1@100 window [60,100]: c1, c2, c3; e2@200 window [160,200]: c4;
-    # e3 (k=2) window [60,100]: nothing (c5@150 outside)
-    assert got == [("e1", "c1"), ("e1", "c2"), ("e1", "c3"), ("e2", "c4")]
-    # bucket width override changes nothing semantically
-    out2 = interval_join(
-        left, right, by="k", on="t", low=-40, high=0,
-        value_cols=["rv"], bucket=7,
-    ).collect()
-    assert sorted((r["lv"], r["match_rv"]) for r in out2) == got
-
-
-def test_interval_join_bounded_fanout_plan(spark):
-    from helix_html2md_spark.operators.relational import interval_join
-
-    left = spark.createDataFrame([(1, 100, "a")], "k long, t long, v string")
-    right = spark.createDataFrame([(1, 90, "b")], "k long, t long, w string")
-    plan = (
-        interval_join(
-            left, right, by="k", on="t", low=-50, high=0,
-            value_cols=["w"],
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # an EQUI join (hash/sort-merge), never a nested-loop fallback
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_asof_and_interval_join_differential_fuzz(spark):
-    """Differential property: on seeded random data, asof_join and
-    interval_join must match brute-force python references exactly."""
-    import random
-
-    for seed in range(6):
-        rng = random.Random(seed)
-        n_keys = rng.randint(1, 4)
-        # negative domain included: bucket assignment must floor-divide
-        # (truncation toward zero would misplace negative timestamps)
-        lrows = [
-            (rng.randint(1, n_keys), rng.randint(-25, 50), f"l{i}")
-            for i in range(rng.randint(1, 25))
-        ]
-        rrows = [
-            (rng.randint(1, n_keys), rng.randint(-25, 50), f"r{i}")
-            for i in range(rng.randint(1, 25))
-        ]
-        schema = "k long, t long, v string"
-        left = spark.createDataFrame(lrows, schema)
-        right = spark.createDataFrame(rrows, schema)
-
-        from helix_html2md_spark.operators.relational import (
-            asof_join, interval_join,
-        )
-
-        # --- asof (strict): brute force latest r.t < l.t per key;
-        # ties on (k, t) in the right rows are arrival-dependent in the
-        # operator, so restrict to unique (k, t) right rows
-        uniq = {}
-        for k, t, v in rrows:
-            uniq[(k, t)] = v
-        rrows_u = [(k, t, v) for (k, t), v in uniq.items()]
-        right_u = spark.createDataFrame(rrows_u, schema)
-        expect = {}
-        for k, t, v in lrows:
-            cands = [(rt, rv) for rk, rt, rv in rrows_u
-                     if rk == k and rt < t]
-            expect[v] = max(cands)[1] if cands else None
-        got = {
-            r["v"]: r["asof_v"]
-            for r in asof_join(
-                left, right_u, by="k", on="t", value_cols=["v"]
-            ).collect()
-        }
-        assert got == expect, f"asof seed {seed}"
-
-        # --- interval: brute force all pairs in [l.t-10, l.t]
-        expect_pairs = sorted(
-            (lv, rv)
-            for lk, lt, lv in lrows
-            for rk, rt, rv in rrows
-            if rk == lk and lt - 10 <= rt <= lt
-        )
-        got_pairs = sorted(
-            (r["v"], r["match_v"])
-            for r in interval_join(
-                left, right, by="k", on="t", low=-10, high=0,
-                value_cols=["v"],
-            ).collect()
-        )
-        assert got_pairs == expect_pairs, f"interval seed {seed}"
-
-
 # --- persisted IVF index (operators/similarity.py) --------------------------
 
 
@@ -283,40 +123,6 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     ]
 
 
-# --- inverted text index (operators/search.py) ------------------------------
-
-
-def test_text_index_search_pruned_and_exact(spark, tmp_path):
-    from helix_html2md_spark.operators.search import (
-        build_text_index, search_text_index,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark spark engine fast"),
-            (2, "engine slow"),
-            (3, "spark engine engine"),
-            (4, "unrelated words entirely"),
-        ],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "tidx")
-    build_text_index(docs, path)
-    out = search_text_index(spark, path, "spark engine", k=10)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the query terms' buckets land as file-level partition filters
-    assert "PartitionFilters" in plan
-    rows = out.collect()
-    got = {r["doc_id"]: (r["score"], r["n_terms_hit"]) for r in rows}
-    # idf: spark df=2 -> floor(4000/2)=2000; engine df=3 -> floor(4000/3)=1333
-    assert got[1] == (2 * 2000 + 1 * 1333, 2)
-    assert got[3] == (1 * 2000 + 2 * 1333, 2)
-    assert got[2] == (1 * 1333, 1)
-    assert 4 not in got
-    # deterministic ranking: doc1 (5333) > doc3 (4666) > doc2 (1333)
-    assert [r["doc_id"] for r in rows] == [1, 3, 2]
-
-
 def test_mix_corpus_weights_and_edges(spark):
     from helix_html2md_spark.operators.corpus import mix_corpus
 
@@ -346,58 +152,6 @@ def test_mix_corpus_weights_and_edges(spark):
         for r in mix_corpus(docs, {"src0": 77}, default=128).collect()
     )
     assert a == b
-
-
-def test_asof_join_tiebreak_and_dedup(spark):
-    """Right-side ties on (by, on): tiebreak column makes the winner
-    deterministic (greatest wins); value_cols containing `on` must not
-    produce two asof_<on> columns."""
-    from helix_html2md_spark.operators.relational import asof_join
-
-    left = spark.createDataFrame([(1, 20, "l")], "k long, t long, lv string")
-    right = spark.createDataFrame(
-        [(1, 10, 1, "first"), (1, 10, 2, "second")],
-        "k long, t long, seq long, rv string",
-    )
-    out = asof_join(
-        left, right, by="k", on="t",
-        value_cols=["t", "rv"],  # `t` duplicates on= -> must dedupe
-        tiebreak="seq",
-    )
-    assert out.columns.count("asof_t") == 1
-    row = out.collect()[0]
-    assert row["asof_rv"] == "second" and row["asof_t"] == 10
-
-
-def test_asof_join_hot_key_warning(spark):
-    import warnings
-
-    from helix_html2md_spark.operators.relational import asof_join
-
-    left = spark.createDataFrame(
-        [(0, t, "x") for t in range(50)], "k long, t long, lv string"
-    )
-    right = spark.createDataFrame([(0, 1, "r")], "k long, t long, rv string")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        asof_join(
-            left, right, by="k", on="t", value_cols=["rv"],
-            hot_key_warn_rows=10,
-        ).collect()
-    assert any("hot key" in str(x.message) for x in w)
-
-
-def test_interval_join_on_in_value_cols(spark):
-    from helix_html2md_spark.operators.relational import interval_join
-
-    left = spark.createDataFrame([(1, 100, "e")], "k long, t long, lv string")
-    right = spark.createDataFrame([(1, 95, "c")], "k long, t long, rv string")
-    out = interval_join(
-        left, right, by="k", on="t", low=-40, high=0,
-        value_cols=["t", "rv"],
-    )
-    assert out.columns.count("match_t") == 1
-    assert [(r["lv"], r["match_rv"]) for r in out.collect()] == [("e", "c")]
 
 
 def test_ivf_sq_index_pruning_and_rescore(spark, tmp_path):
@@ -447,25 +201,6 @@ def test_ivf_sq_index_pruning_and_rescore(spark, tmp_path):
         F.min(F.array_min("codes")), F.max(F.array_max("codes"))
     ).collect()[0]
     assert code_range[0] >= 0 and code_range[1] <= 255
-
-
-def test_asof_join_null_keys_and_timestamps(spark):
-    """DuckDB/pandas ASOF null semantics: right rows with NULL on/by are
-    dropped (a null ts must not become every left row's 'latest prior'
-    match; NULL by-keys never pair), left nulls keep NULL matches."""
-    from helix_html2md_spark.operators.relational import asof_join
-
-    left = spark.createDataFrame([(1, 10), (None, 10)], "k int, t int")
-    right = spark.createDataFrame(
-        [(1, None, "rNULL"), (None, 5, "r5")], "k int, t int, rv string"
-    )
-    out = {
-        tuple(r)
-        for r in asof_join(
-            left, right, by="k", on="t", value_cols=["rv"]
-        ).collect()
-    }
-    assert out == {(1, 10, None, None), (None, 10, None, None)}
 
 
 def test_pq_encode_pure_jvm_and_deterministic(spark):
@@ -541,306 +276,3 @@ def test_ivf_pq_index_pruning_and_rescore(spark, tmp_path):
     # self-contained: codebooks persisted beside the centroids
     cb = spark.read.parquet(f"{pq_path}/codebooks")
     assert cb.count() == 8 * 16
-
-
-def test_interval_join_exact_buckets_beyond_double_precision(spark):
-    """Bucket ids must come from INTEGER floor division: nanosecond
-    epochs (~1.7e18) are beyond float64's 2^53 integer range, so the
-    old F.floor(x / w) double path mis-bucketed boundary rows and
-    silently dropped matches."""
-    from helix_html2md_spark.operators.relational import interval_join
-
-    base = 1_700_000_000_000_000_000  # ns epoch, >> 2^53
-    w = 1_000_000_000  # 1s buckets
-    left = spark.createDataFrame(
-        [(1, base + i * w) for i in range(8)], "k int, t long"
-    )
-    right = spark.createDataFrame(
-        [(1, base + i * w // 2) for i in range(16)], "k int, t long"
-    )
-    got = interval_join(
-        left, right, by="k", on="t", low=-w, high=w,
-        value_cols=[], bucket=w,
-    ).count()
-    # exact expectation from a driver-side nested loop (ints are exact)
-    lv = [base + i * w for i in range(8)]
-    rv = [base + i * w // 2 for i in range(16)]
-    want = sum(1 for a in lv for b in rv if a - w <= b <= a + w)
-    assert got == want > 0
-
-
-def test_sessions_fractional_second_gap_splits(spark):
-    """A 1800.5s gap must start a new session: whole-second
-    unix_timestamp truncation would compare 1800 > 1800 and merge."""
-    import datetime as dt
-
-    from helix_html2md_spark.operators.relational import (
-        user_event_sessions,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    ev = spark.createDataFrame(
-        [
-            (1, 1, t0, 1.0),
-            (2, 1, t0 + dt.timedelta(seconds=1800, microseconds=500_000), 1.0),
-            (3, 1, t0 + dt.timedelta(seconds=3600, microseconds=400_000), 1.0),
-        ],
-        "event_id long, user_id long, ts timestamp_ntz, value double",
-    )
-    out = user_event_sessions(ev).collect()
-    # gap 1->2 is 1800.5s (> 1800: split); gap 2->3 is 1799.9s (merge)
-    assert [(r["session_seq"], r["n_events"]) for r in out] == [
-        (1, 1), (2, 2)
-    ]
-
-
-def test_region_nation_rollup_vs_duckdb(spark):
-    """ROLLUP grouping sets differential: same subtotal rows as DuckDB
-    GROUP BY ROLLUP over the same parquet tables."""
-    import duckdb
-
-    from helix_html2md_spark.operators.relational import (
-        load, region_nation_rollup,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = [
-        (r["r_name"], r["n_name"], r["n_customers"], r["sum_acctbal"])
-        for r in region_nation_rollup(
-            load(spark, sf, "customer"),
-            load(spark, sf, "nation"),
-            load(spark, sf, "region"),
-        ).collect()
-    ]
-    con = duckdb.connect()
-    want = con.execute(
-        f"""
-        SELECT r_name, n_name, count(*) AS n_customers,
-               cast(sum(cast(c_acctbal AS decimal(18,2))) AS double)
-        FROM read_parquet('{sf}/customer.parquet') c
-        JOIN read_parquet('{sf}/nation.parquet') n ON c_nationkey = n_nationkey
-        JOIN read_parquet('{sf}/region.parquet') r ON n_regionkey = r_regionkey
-        GROUP BY ROLLUP (r_name, n_name)
-        ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
-        """
-    ).fetchall()
-    assert got == [tuple(r) for r in want]
-    assert any(r[0] is None for r in got)  # grand total present
-
-
-def test_grouped_percentiles_hand_computed(spark):
-    from helix_html2md_spark.operators.relational import (
-        grouped_percentiles,
-    )
-
-    df = spark.createDataFrame(
-        [("a", v) for v in [10, 20, 30, 40]] + [("b", 5)],
-        "g string, x long",
-    )
-    out = {
-        (r["g"], r["percent"]): (r["n"], r["value"])
-        for r in grouped_percentiles(
-            df, group="g", col="x", percents=(25, 50, 75, 100)
-        ).collect()
-    }
-    # nearest-rank: ceil(p*n/100) -> a: 25%->pos1=10, 50%->pos2=20,
-    # 75%->pos3=30, 100%->pos4=40; b(n=1): every p -> 5
-    assert out == {
-        ("a", 25): (4, 10), ("a", 50): (4, 20),
-        ("a", 75): (4, 30), ("a", 100): (4, 40),
-        ("b", 25): (1, 5), ("b", 50): (1, 5),
-        ("b", 75): (1, 5), ("b", 100): (1, 5),
-    }
-    import pytest
-
-    with pytest.raises(ValueError):
-        grouped_percentiles(df, group="g", col="x", percents=())
-    with pytest.raises(ValueError):
-        grouped_percentiles(df, group="g", col="x", percents=(0,))
-    with pytest.raises(ValueError):
-        grouped_percentiles(df, group="g", col="x", percents=(50.5,))
-
-
-def test_grouped_percentiles_vs_duckdb_and_plan(spark):
-    """Row-for-row DuckDB differential over the real documents table
-    (per-source n_chars profile) + the scale-shape assertion: the only
-    window runs over the HISTOGRAM (grouped by source), never a
-    single-partition pass over raw rows."""
-    import duckdb
-
-    from helix_html2md_spark.operators.relational import (
-        grouped_percentiles,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    out = grouped_percentiles(
-        docs, group="source", col="n_chars", percents=(50, 90, 99)
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan
-    assert "Python" not in plan
-    got = [
-        (r["source"], r["percent"], r["n"], r["value"])
-        for r in out.collect()
-    ]
-    con = duckdb.connect()
-    want = con.execute(
-        f"""
-        WITH h AS (SELECT source, n_chars, count(*) cnt
-                   FROM read_parquet('{sf}/documents.parquet')
-                   GROUP BY 1, 2),
-        c AS (SELECT source, n_chars,
-                     sum(cnt) OVER (PARTITION BY source ORDER BY n_chars
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS cum,
-                     sum(cnt) OVER (PARTITION BY source) AS n
-              FROM h),
-        x AS (SELECT source, unnest([50, 90, 99]) AS percent, n_chars,
-                     cum, n FROM c)
-        SELECT source, percent, cast(n AS bigint) AS n,
-               min(n_chars) AS value
-        FROM x
-        WHERE cum >= (percent * n + 99) // 100
-        GROUP BY source, percent, n
-        ORDER BY source, percent
-        """
-    ).fetchall()
-    assert got == [tuple(r) for r in want]
-
-
-def test_asof_join_slabbed_matches_asof_join(spark):
-    """The time-slab decomposition must equal the single-window
-    asof_join row-for-row — seeded random data with a HOT key, ties
-    pinned by tiebreak, negative domain, strict both ways, slab widths
-    from degenerate (one slab) to width 1."""
-    import random
-
-    from helix_html2md_spark.operators.relational import (
-        asof_join, asof_join_slabbed,
-    )
-
-    for seed in range(4):
-        rng = random.Random(100 + seed)
-        # key 1 is hot: ~70% of rows
-        def key():
-            return 1 if rng.random() < 0.7 else rng.randint(2, 4)
-
-        lrows = [
-            (key(), rng.randint(-40, 60), f"l{i}")
-            for i in range(rng.randint(5, 40))
-        ]
-        rrows = [
-            (key(), rng.randint(-40, 60), f"r{i}", i)
-            for i in range(rng.randint(5, 40))
-        ]
-        left = spark.createDataFrame(lrows, "k long, t long, v string")
-        right = spark.createDataFrame(
-            rrows, "k long, t long, v string, eid long"
-        )
-        for strict in (True, False):
-            want = sorted(
-                map(
-                    tuple,
-                    asof_join(
-                        left, right, by="k", on="t",
-                        value_cols=["v"], strict=strict, tiebreak="eid",
-                    ).collect(),
-                )
-            )
-            for width in (1, 7, 1000):
-                got = sorted(
-                    map(
-                        tuple,
-                        asof_join_slabbed(
-                            left, right, by="k", on="t",
-                            value_cols=["v"], slab_width=width,
-                            strict=strict, tiebreak="eid",
-                        ).collect(),
-                    )
-                )
-                assert got == want, (seed, strict, width)
-
-
-def test_asof_join_slabbed_nulls_empty_and_validation(spark):
-    import pytest
-
-    from helix_html2md_spark.operators.relational import asof_join_slabbed
-
-    left = spark.createDataFrame(
-        [(1, 10, "a"), (None, 5, "b"), (1, None, "c")],
-        "k long, t long, v string",
-    )
-    right = spark.createDataFrame(
-        [(1, 3, "r1"), (None, 1, "rX"), (1, None, "rY")],
-        "k long, t long, v string",
-    )
-    out = {
-        r["v"]: r["asof_v"]
-        for r in asof_join_slabbed(
-            left, right, by="k", on="t", value_cols=["v"], slab_width=4
-        ).collect()
-    }
-    # null-by/null-on left rows keep NULL matches; null right rows
-    # never match anyone
-    assert out == {"a": "r1", "b": None, "c": None}
-    # empty right: all-left NULLs
-    empty = right.filter("1 = 0")
-    out2 = asof_join_slabbed(
-        left, empty, by="k", on="t", value_cols=["v"], slab_width=4
-    ).collect()
-    assert all(r["asof_v"] is None for r in out2) and len(out2) == 3
-    with pytest.raises(ValueError, match="slab_width"):
-        asof_join_slabbed(
-            left, right, by="k", on="t", value_cols=["v"], slab_width=0
-        )
-    ts = spark.createDataFrame(
-        [(1, "2026-01-01 00:00:00", "x")], "k long, t string, v string"
-    ).withColumn("t", __import__("pyspark.sql.functions", fromlist=["F"]).to_timestamp("t"))
-    with pytest.raises(ValueError, match="numeric"):
-        asof_join_slabbed(
-            ts, ts, by="k", on="t", value_cols=["v"], slab_width=4
-        )
-
-
-def test_asof_join_slabbed_partitions_by_slab(spark):
-    """The plan's first exchange must hash on the composite (key, slab)
-    struct — the whole point is that a hot key fans out across slabs."""
-    from helix_html2md_spark.operators.relational import asof_join_slabbed
-
-    left = spark.createDataFrame([(1, 10, "a")], "k long, t long, v string")
-    right = spark.createDataFrame([(1, 3, "r")], "k long, t long, v string")
-    plan = (
-        asof_join_slabbed(
-            left, right, by="k", on="t", value_cols=["v"], slab_width=4
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the composite key really carries the slab: the _bk struct is
-    # built from (k, truncated t/width) and the window hashes on it —
-    # a regression to the bare key would still pass a bare
-    # "hashpartitioning(_by#" check (plain asof_join plans have one)
-    assert "struct(k, k#" in plan and ", _s, cast(" in plan, plan[:2500]
-    assert "hashpartitioning(_by#" in plan
-
-
-def test_asof_join_slabbed_map_typed_values(spark):
-    """map-typed value columns must survive the carry pass (max_by
-    orders on (on, tiebreak) only; max(struct(...)) would demand an
-    orderable value struct)."""
-    from helix_html2md_spark.operators.relational import asof_join_slabbed
-
-    left = spark.createDataFrame([(1, 100, "a")], "k long, t long, v string")
-    right = spark.createDataFrame(
-        [(1, 3, {"x": "1"}, 1), (1, 5, {"y": "2"}, 2)],
-        "k long, t long, attrs map<string,string>, eid long",
-    )
-    out = asof_join_slabbed(
-        left, right, by="k", on="t", value_cols=["attrs"],
-        slab_width=10, tiebreak="eid",
-    ).collect()
-    # left sits in an empty slab -> the match comes FROM the carry
-    assert out[0]["asof_attrs"] == {"y": "2"}
-    assert out[0]["asof_t"] == 5

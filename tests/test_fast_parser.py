@@ -1,12 +1,14 @@
-"""Fast regex HTML tokenizer vs the stdlib oracle: tree-identical on all
-fixtures and the synthetic corpus; output-identical on structured random
-HTML."""
+"""Fast regex HTML tokenizer vs the stdlib oracle
+(tests/stdlib_parser_oracle.py): tree-identical on all fixtures, the
+synthetic corpus and the golden digest set's pages and gridtable cases;
+output-identical on structured random HTML."""
 
 import random
 import string
 from pathlib import Path
 
-from helix_html2md_spark.core.dom import Element, Text, _fast_parse, parse_html_stdlib
+from helix_html2md_spark.core.dom import Text, _fast_parse
+from tests.stdlib_parser_oracle import parse_html_stdlib
 
 FIX = Path("/root/reference/test/fixtures")
 
@@ -32,12 +34,20 @@ def test_fixtures_tree_identical():
 
 
 def test_synthetic_tree_identical():
+    """In-repo HTML through both parsers: synthetic documents, the
+    golden digest set's small_pages pages and its gridtable edge cases."""
     from helix_html2md_spark.operators.extract import assemble_html
     from helix_html2md_spark.sources.synthetic import gen_doc
+    from tests.golden_synth_inputs import GRID_CASES, _main, page_docs
 
     for i in range(40):
         h = assemble_html(gen_doc(42, i)["spans"])
         assert dump(parse_html_stdlib(h)) == dump(_fast_parse(h)), i
+    for doc_id, h, _media in page_docs():
+        assert dump(parse_html_stdlib(h)) == dump(_fast_parse(h)), doc_id
+    for name, body in GRID_CASES:
+        h = _main(body)
+        assert dump(parse_html_stdlib(h)) == dump(_fast_parse(h)), name
 
 
 def test_unquoted_attr_trailing_slash():

@@ -25,36 +25,22 @@ def test_filter_pushdown_to_scan(spark):
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
 
-def test_region_rollup_broadcasts_dims(spark):
-    from helix_html2md_spark.operators.relational import load, region_rollup
-
-    df = region_rollup(
-        load(spark, "/root/testdata/sf0.001", "customer"),
-        load(spark, "/root/testdata/sf0.001", "nation"),
-        load(spark, "/root/testdata/sf0.001", "region"),
-    )
-    plan = _plan(df)
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in plan
-
-
-# queries whose ONE intentional Python crossing is a gated mapInArrow
-# (extraction, PDF parse, boilerplate strip) or mapInPandas (centroid
-# map-side partials); everything else in the battery must stay pure JVM
+# queries whose ONE intentional Python crossing is the gated mapInArrow
+# of extraction, PDF parse or boilerplate strip; everything else in the
+# battery must stay pure JVM, and no query crosses through pandas
 _MAP_IN_PYTHON_OK = {
-    "extract_spans", "pdf_extract", "boilerplate", "label_centroids",
-    "extract_fallback",
+    "extract_spans", "pdf_extract", "boilerplate", "extract_fallback",
 }
 
 
 def test_battery_queries_stay_jvm_side(spark):
-    """No Python UDFs in the relational/dedup/text battery — everything
+    """No Python UDFs in the dedup/similarity/text battery — everything
     whole-stage-codegen-able.  Grouped Python (applyInPandas →
-    FlatMapGroupsInPandas: whole groups cross Arrow) is banned for EVERY
-    battery query, exempted or not — the exempted queries' one allowed
-    crossing is a gated mapInArrow/mapInPandas (map-side, bounded
-    batches), and it appears exactly once; row-at-a-time and scalar
-    Arrow UDFs are banned everywhere."""
+    FlatMapGroupsInPandas: whole groups cross Arrow) and mapInPandas are
+    banned for EVERY query, exempted or not — the exempted queries' one
+    allowed crossing is a gated mapInArrow (map-side, bounded batches),
+    and it appears exactly once; row-at-a-time and scalar Arrow UDFs are
+    banned everywhere."""
     import __spark_entry__ as E
 
     for name, fn in E.queries().items():
@@ -64,8 +50,9 @@ def test_battery_queries_stay_jvm_side(spark):
         assert "FlatMapGroupsInPandas" not in plan, name
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
-        crossings = plan.count("MapInArrow") + plan.count("MapInPandas")
-        assert crossings == (1 if name in _MAP_IN_PYTHON_OK else 0), name
+        assert "MapInPandas" not in plan, name
+        exempt = name in _MAP_IN_PYTHON_OK
+        assert plan.count("MapInArrow") == (1 if exempt else 0), name
 
 
 def test_pack_sequences_has_no_single_partition_window(spark):

@@ -5,6 +5,7 @@ import string
 
 from hypothesis import given, settings, strategies as st
 
+from helix_html2md_spark.core.dom import _fast_parse
 from helix_html2md_spark.core.html2md import html2md
 from helix_html2md_spark.core.transform import ConstraintsError
 from helix_html2md_spark.operators.extract import decompose_md
@@ -66,3 +67,25 @@ def test_arbitrary_text_roundtrip(text):
     md = html2md(html, {})
     assert isinstance(md, str)
     assert "sentinelXYZ" in md
+
+
+# markup pieces where a regex tokenizer can go wrong: unterminated
+# comments, CDATA, raw-text elements, entities and quotes
+_HOSTILE = st.sampled_from([
+    "<", ">", "</", "/>", "<!--", "-->", "<!-->", "<![CDATA[", "]]>", "<!",
+    "<?", "<script>", "</script", "</SCRIPT>", "<style>", "</style ",
+    "&", "&#", "&#x", "&#x26;", "&amp", "&bogus;", '"', "'", "=",
+    "<a href=", "<td colspan=", "<p ", "<br/", "\x00", "\ud800",
+])
+
+
+@given(st.one_of(
+    html_fragment(),
+    st.text(),
+    st.lists(st.one_of(_HOSTILE, text_st), max_size=30).map("".join),
+))
+@settings(max_examples=400, deadline=None)
+def test_fast_parse_never_raises(html):
+    # parse_html has no fallback parser: an exception here would turn
+    # the document into a parse_error row
+    assert _fast_parse(html).tag == "#root"
