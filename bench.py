@@ -6,7 +6,7 @@ line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
 Headline = HTML->Markdown span extraction over the deterministic synthetic
 interleaved corpus (docs scaled by sf: sf * 100_000) + the dedup /
-similarity / text battery over the driver tables.
+corpus / text battery over the driver tables.
 
 North-rule scaling evidence (BASELINE.json, the sandbox stand-in for
 N vs 4N executors): the DEFAULT run embeds an adjacent local[2]-vs-

@@ -79,10 +79,6 @@ def _stopword_count_t(toks) -> Column:
     return _nsize(F.filter(toks, lambda w: F.array_contains(stop, w)))
 
 
-def stopword_count(col) -> Column:
-    return _stopword_count_t(tokens(col))
-
-
 # the three ratio formulas below are transcribed into SQL in the DuckDB
 # oracles AND consumed by two operators (quality_features here,
 # operators/pipeline.py::clean_corpus) — ONE Spark-side transcription

@@ -38,7 +38,7 @@ _PERSISTED: list[DataFrame] = []
 
 
 def release_persisted() -> None:
-    """Unpersist every table cached by the dedup/similarity operators."""
+    """Unpersist every table cached by the dedup and corpus operators."""
     while _PERSISTED:
         try:
             _PERSISTED.pop().unpersist()
@@ -103,7 +103,6 @@ def _capped_bucket_pairs(
     keys: list[str],
     max_bucket_size: int,
     payload: str | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """Candidate pairs from bucket membership, skew-guarded.
 
@@ -186,12 +185,9 @@ def _capped_bucket_pairs(
     heavy_pairs = tagged.filter(
         (F.col("_n") > max_bucket_size) & (F.col("doc_id") != F.col("_rep.d"))
     ).select(*out_h)
-    out = light_pairs.unionByName(heavy_pairs)
     # multi-band bucketing (MinHash bands, SimHash blocks) emits the same
-    # pair once per shared bucket -> distinct; single-bucket-per-doc
-    # callers (one LSH bucket per vector) CANNOT produce duplicates, and
-    # the distinct would hash the full payload arrays for nothing
-    return out.distinct() if dedup else out
+    # pair once per shared bucket -> distinct
+    return light_pairs.unionByName(heavy_pairs).distinct()
 
 
 def minhash_candidate_pairs(

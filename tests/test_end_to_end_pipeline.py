@@ -2,7 +2,7 @@
 
     language gate (langid) -> quality gate (gopher) ->
     exact-substring window dedup -> benchmark decontamination ->
-    BPE tokenize to ids -> sequence packing.
+    sequence packing.
 
 Each stage is individually oracled elsewhere; this test pins that the
 stages COMPOSE — schemas line up, every stage's monotone-shrink
@@ -14,17 +14,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from helix_html2md_spark.functions.langid import filter_language
 from helix_html2md_spark.operators.corpus import gopher_filter
 from helix_html2md_spark.operators.dedup import (
     decontaminate, drop_dup_window_docs, release_persisted,
 )
 from helix_html2md_spark.operators.packing import pack_sequences
-from helix_html2md_spark.operators.tokenizer import (
-    bpe_encode, bpe_vocab, corpus_alphabet, train_bpe,
-)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -47,7 +42,7 @@ def test_full_training_pipeline(spark):
         # 0. language gate: monolingual corpus — keep en (plus 'und'
         # for marker-less soup docs the later gates judge on merit).
         # localCheckpoint = the macro-stage boundary a real pipeline
-        # puts here anyway: five more stages compose on top, and
+        # puts here anyway: four more stages compose on top, and
         # without truncating the lineage the accumulated plan TEXT
         # (rendered by AQE on every update) grows past the driver heap
         docs = filter_language(pool, keep=("en", "und")).localCheckpoint()
@@ -81,17 +76,8 @@ def test_full_training_pipeline(spark):
         # must be gone now
         assert stage3.filter("doc_id >= 490").count() == 0
 
-        # 4. tokenize to trainer ids
-        merges = train_bpe(stage3, num_merges=128)
-        vocab = bpe_vocab(corpus_alphabet(stage3), merges)
-        toks = bpe_encode(stage3, merges, vocab=vocab)
-        tok_rows = toks.count()
-        assert tok_rows == n3
-        # training-corpus vocabulary closure: zero unknown ids
-        assert toks.agg(F.sum("n_unk")).collect()[0][0] == 0
-
-        # 5. pack into 512-token sequences (whitespace token budget —
-        # pack_sequences' own unit; the ids stream rides along by id)
+        # 4. pack into 512-token sequences (whitespace token budget,
+        # pack_sequences' own unit)
         packed = pack_sequences(stage3, seq_len=512)
         rows = packed.select(
             "doc_id", "pack_id", "offset_in_pack"

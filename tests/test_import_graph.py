@@ -4,8 +4,7 @@ Every ``helix_html2md_spark`` module must be imported, directly or
 transitively, from the extraction path, the spark-submit job, the
 benchmark or the driver entry (``__spark_entry__.py``, whose queries
 are the side battery); a module none of them reaches is dead code.
-One battery operator that only its own tests use is listed by name and
-may not be joined by others.
+No module is exempt.
 The bench scripts may import only modules those roots already reach,
 so they cannot keep a module alive on their own.
 
@@ -31,9 +30,6 @@ ROOT_MODULES = [
 ROOT_SCRIPTS = [ROOT / "jobs" / "extract_job.py", ROOT / "__spark_entry__.py"]
 ROOT_SCRIPTS += sorted((ROOT / "perfbench").glob("*.py"))
 BENCH_SCRIPTS = [ROOT / "bench.py", ROOT / "bench_extra.py"]
-# battery operators that only their own tests import; this list may only
-# shrink (a module leaves it when it is deleted with its tests)
-TESTED_ONLY = {f"{PKG}.operators.tokenizer"}
 
 
 def _package_modules() -> dict[str, Path]:
@@ -103,9 +99,8 @@ def test_every_package_module_is_reachable_from_a_root():
     assert set(ROOT_MODULES) <= set(modules)
     assert all(p.is_file() for p in ROOT_SCRIPTS + BENCH_SCRIPTS)
     assert len(ROOT_SCRIPTS) > 2  # perfbench/*.py matched
-    assert TESTED_ONLY <= set(modules), sorted(TESTED_ONLY - set(modules))
     unreachable = set(modules) - _reachable(modules)
-    assert unreachable <= TESTED_ONLY, sorted(unreachable - TESTED_ONLY)
+    assert not unreachable, sorted(unreachable)
 
 
 def test_bench_scripts_import_only_reachable_modules():

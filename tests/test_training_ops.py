@@ -1,4 +1,4 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis."""
+"""Training-data pipeline operators: dedup, near-dup pairs, text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -141,53 +141,6 @@ def test_clean_corpus_gates_and_dedup(spark):
     assert kept == [1, 5]
 
 
-def test_cosine_topk(spark):
-    from helix_html2md_spark.operators.similarity import bucketed_topk, cosine_topk
-
-    rows = [
-        {"vec_id": 0, "embedding": [1.0, 0.0, 0.0], "label": 0},
-        {"vec_id": 1, "embedding": [0.9, 0.1, 0.0], "label": 0},
-        {"vec_id": 2, "embedding": [0.0, 1.0, 0.0], "label": 1},
-        {"vec_id": 3, "embedding": [-1.0, 0.0, 0.0], "label": 2},
-    ]
-    emb = spark.createDataFrame(rows)
-    top = cosine_topk(emb.filter("vec_id != 0"), [1.0, 0.0, 0.0], k=2).collect()
-    assert [r["vec_id"] for r in top] == [1, 2]
-    assert top[0]["cosine"] > 0.99
-
-    planes = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-    btop = bucketed_topk(emb.filter("vec_id != 0"), [1.0, 0.0, 0.0], planes, k=2).collect()
-    assert btop[0]["vec_id"] == 1  # same bucket as the query
-
-
-def test_cosine_neardup_pairs(spark):
-    from helix_html2md_spark.operators.similarity import (
-        cosine_neardup_pairs, rademacher_planes,
-    )
-
-    rows = [
-        {"vec_id": 1, "embedding": [1.0, 0.0, 0.01, 0.0], "label": 0},
-        {"vec_id": 2, "embedding": [0.99, 0.01, 0.0, 0.0], "label": 0},  # ~dup of 1
-        {"vec_id": 3, "embedding": [0.0, 1.0, 0.0, 0.0], "label": 1},  # orthogonal
-        {"vec_id": 4, "embedding": [-1.0, 0.0, 0.0, 0.01], "label": 2},  # opposite
-    ]
-    emb = spark.createDataFrame(rows)
-    # brute (no planes): exactly the >= threshold pairs
-    got = {
-        (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in cosine_neardup_pairs(emb, threshold=0.9).collect()
-    }
-    assert set(got) == {(1, 2)} and got[(1, 2)] > 0.99
-    # bucketed: near-dups share all sign bits, so (1,2) survives; the
-    # opposite vector can never share a bucket with 1
-    planes = rademacher_planes(2, 4)
-    got_b = {
-        (r["vec_a"], r["vec_b"])
-        for r in cosine_neardup_pairs(emb, threshold=0.9, planes=planes).collect()
-    }
-    assert got_b == {(1, 2)}
-
-
 def test_quality_features(spark, docs):
     from helix_html2md_spark.functions.text import quality_features
 
@@ -195,23 +148,6 @@ def test_quality_features(spark, docs):
     assert q[1]["n_tokens"] == 9
     assert q[1]["stopword_ratio"] == pytest.approx(2 / 9, abs=1e-6)
     assert q[5]["n_tokens"] == 0  # empty doc is safe
-
-
-def test_ivf_topk_recall(spark):
-    """IVF-Flat probes a subset of cells yet recovers most of the exact
-    top-10 on the clustered driver embeddings."""
-    from helix_html2md_spark.operators.similarity import (
-        cosine_topk, ivf_topk, train_centroids,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qv = list(emb.filter("vec_id = 0").head()["embedding"])
-    rest = emb.filter("vec_id != 0")
-    exact = {r["vec_id"] for r in cosine_topk(rest, qv, k=10).collect()}
-    cents = train_centroids(emb, k=8)
-    approx = {r["vec_id"] for r in ivf_topk(rest, qv, cents, k=10, nprobe=3).collect()}
-    recall = len(exact & approx) / 10
-    assert recall >= 0.5, (recall, exact, approx)
 
 
 def test_dup_components_long_chain(spark):
@@ -426,90 +362,6 @@ def test_simhash_rejects_other_widths(spark):
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with _pytest.raises(ValueError):
         simhash(docs, bits=32)
-
-
-def test_cosine_zero_vector_never_tops(spark):
-    """Zero-norm vectors rank NULL-last instead of diverging across
-    engines (Spark NULL vs DuckDB NaN-sorts-first — round-4 review)."""
-    from helix_html2md_spark.operators.similarity import (
-        cosine_neardup_pairs, cosine_topk,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0], 0),
-            (1, [0.9, 0.1], 0),
-            (2, [0.0, 0.0], 0),  # zero vector
-        ],
-        "vec_id long, embedding array<float>, label int",
-    )
-    rows = cosine_topk(emb, [1.0, 0.0], k=3).collect()
-    assert [r["vec_id"] for r in rows] == [0, 1, 2]
-    assert rows[-1]["cosine"] is None
-    pairs = cosine_neardup_pairs(emb, threshold=0.5).collect()
-    assert all(2 not in (r["vec_a"], r["vec_b"]) for r in pairs)
-    assert any({r["vec_a"], r["vec_b"]} == {0, 1} for r in pairs)
-
-
-def test_exact_mode_is_truly_all_pairs(spark):
-    """planes=None must NOT be silently skew-capped: every qualifying
-    pair appears even when the corpus exceeds max_bucket_size."""
-    from helix_html2md_spark.operators.similarity import (
-        cosine_neardup_pairs,
-    )
-
-    n = 40
-    emb = spark.createDataFrame(
-        [(i, [1.0, 0.001 * i], 0) for i in range(n)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    pairs = cosine_neardup_pairs(
-        emb, threshold=0.99, planes=None, max_bucket_size=8
-    ).collect()
-    # all vectors are near-parallel: every unordered pair qualifies
-    assert len(pairs) == n * (n - 1) // 2
-
-
-def test_rademacher_planes_distinct_any_count():
-    from helix_html2md_spark.operators.similarity import (
-        rademacher_planes,
-    )
-
-    planes = rademacher_planes(10, 64)  # 10 > log2(64): old bug zone
-    as_tuples = {tuple(p) for p in planes}
-    assert len(as_tuples) == 10  # all distinct
-    assert all(any(v > 0 for v in p) for p in planes)  # none constant
-    # deterministic
-    assert rademacher_planes(10, 64) == planes
-
-
-def test_bucketed_topk_python_jvm_bucket_agreement(spark):
-    """The query's bucket (Python) and corpus buckets (JVM) share one
-    sign convention: reusing the corpus operator on the query row must
-    land it in the bucket the Python loop computes."""
-    from helix_html2md_spark.operators.similarity import (
-        hyperplane_buckets, rademacher_planes,
-    )
-
-    planes = rademacher_planes(4, 8)
-    vecs = [
-        [float((i * 7 + j * 3) % 5 - 2) for j in range(8)]
-        for i in range(12)
-    ]
-    df = spark.createDataFrame(
-        [(i, v, 0) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    jvm = {
-        r["vec_id"]: r["bucket"]
-        for r in hyperplane_buckets(df, planes).collect()
-    }
-    for i, v in enumerate(vecs):
-        qbits = 0
-        for pi, p in enumerate(planes):
-            if sum(float(a) * float(b) for a, b in zip(v, p)) >= 0:
-                qbits |= 1 << pi
-        assert jvm[i] == qbits, i
 
 
 def test_dedup_segments_whitespace_only_doc_survives(spark):
