@@ -1,154 +1,25 @@
-"""BPE training/encoding (operators/tokenizer.py).
+"""The BPE pre-tokenizer (functions/text.py::bpe_tokens, bpe_token_count).
 
-BPE is not SQL-expressible, so the oracle layers here are hand-derived
-merge sequences (small corpora where the greedy pair arithmetic is
-checkable on paper), the lossless-segmentation invariant proved over
-every sf0.001 document JVM-side, determinism across builds, and the
-one-Python-crossing plan shape."""
+These are the units a byte-pair encoder would merge within, and the
+segmentation that the `bpe_token_stats` query pins by md5. The oracle
+layers here are a hand-counted word histogram and segmentation
+invariants checked JVM-side over every sf0.001 document."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from helix_html2md_spark.functions.text import WS_CLASS, bpe_tokens
-from helix_html2md_spark.operators.tokenizer import (
-    _encode_word, _train_from_counts, bpe_encode, train_bpe, word_counts,
+from helix_html2md_spark.functions.text import (
+    WS_CLASS, bpe_token_count, bpe_tokens,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
-def test_train_bpe_hand(spark):
-    # pre-tokens: "xy", " xy", " xy", " zx" (space-glued).
-    # pairs: (x,y)=3, (' ',x)=2, (' ',z)=1, (z,x)=1 -> merge (x,y);
-    # then (' ',xy)=2 -> merge; remaining pairs count 1 < 2 -> stop.
-    docs = spark.createDataFrame(
-        [(1, "xy xy xy zx")], "doc_id long, text string"
-    )
-    assert train_bpe(docs, num_merges=10) == [("x", "y"), (" ", "xy")]
-    # num_merges caps the list even when more pairs qualify
-    assert train_bpe(docs, num_merges=1) == [("x", "y")]
-    with pytest.raises(ValueError):
-        train_bpe(docs, num_merges=0)
-
-
-def test_train_bpe_tie_break(spark):
-    # pairs (a,b)=2, (' ',c)=2, (c,d)=2 all tie -> lexicographically
-    # smallest pair wins each round: (' ',c), then (' c',d), then (a,b)
-    docs = spark.createDataFrame(
-        [(1, "ab cd ab cd")], "doc_id long, text string"
-    )
-    assert train_bpe(docs, num_merges=10) == [
-        (" ", "c"), (" c", "d"), ("a", "b"),
-    ]
-
-
-def test_bpe_encode_hand(spark):
-    train = spark.createDataFrame(
-        [(1, "xy xy xy zx")], "doc_id long, text string"
-    )
-    merges = train_bpe(train, num_merges=10)
-    docs = spark.createDataFrame(
-        [(7, "xy zx xy"), (8, ""), (9, None)],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in bpe_encode(docs, merges).collect()}
-    # "xy" -> [xy]; " zx" unlearned -> [' ','z','x']; " xy" -> [' xy']
-    assert list(out[7]["pieces"]) == ["xy", " ", "z", "x", " xy"]
-    assert out[7]["n_pieces"] == 5
-    assert out[8]["n_pieces"] == 0 and list(out[8]["pieces"]) == []
-    assert out[9]["n_pieces"] == 0 and list(out[9]["pieces"]) == []
-    assert set(out) == {7, 8, 9}
-    # empty merge table degenerates to characters
-    chars = bpe_encode(docs, []).filter(F.col("doc_id") == 7).collect()[0]
-    assert list(chars["pieces"]) == list("xy") + list(" zx") + list(" xy")
-    # pathological-run guard: over-length words pass through whole
-    # (still lossless) and are excluded from learning
-    long_docs = spark.createDataFrame(
-        [(1, "abcdef ab ab ab")], "doc_id long, text string"
-    )
-    guarded = bpe_encode(long_docs, merges, max_word_len=3).collect()[0]
-    assert "abcdef" in list(guarded["pieces"])
-    m = train_bpe(long_docs, num_merges=10, max_word_len=3)
-    assert all(len(a + b) <= 3 for a, b in m)
-
-
-def test_bpe_determinism_and_lossless(spark):
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    m1 = train_bpe(docs, num_merges=64)
-    m2 = train_bpe(docs, num_merges=64)
-    assert m1 == m2 and len(m1) == 64
-    # lossless segmentation: concat(pieces) == concat(non-ws pre-tokens)
-    # for EVERY document (checked JVM-side, zero rows may diverge)
-    enc = bpe_encode(docs, m1)
-    ref = docs.select(
-        "doc_id",
-        F.array_join(
-            F.filter(
-                bpe_tokens(F.col("text")),
-                lambda t: ~t.rlike("^" + WS_CLASS + "+$"),
-            ),
-            "",
-        ).alias("ref_text"),
-    )
-    bad = (
-        enc.join(ref, "doc_id")
-        .filter(F.array_join("pieces", "") != F.col("ref_text"))
-        .count()
-    )
-    assert bad == 0
-    # merging strictly reduces (or keeps) the piece count vs characters
-    n_pieces = enc.agg(F.sum("n_pieces")).collect()[0][0]
-    n_chars = ref.agg(
-        F.sum(F.length("ref_text"))
-    ).collect()[0][0]
-    assert 0 < n_pieces < n_chars
-
-
-def test_bpe_encode_plan(spark):
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    merges = [("t", "h"), ("th", "e")]
-    plan = (
-        bpe_encode(docs, merges)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # exactly ONE Python crossing — the distinct-word table
-    assert plan.count("MapInPandas") == 1
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.text(alphabet="ab c", min_size=1, max_size=10),
-            st.integers(1, 9),
-        ),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_trainer_encoder_consistency(corpus):
-    """The classic BPE invariant: greedy lowest-rank replay through
-    _encode_word reproduces the trainer's OWN final segmentation for
-    every training word (a merge can never create a new adjacency of
-    an earlier-rank pair — merging only concatenates, and both halves
-    of a rank-r pair already exist at rank r).  Pure-Python twin of
-    train_bpe's loop, no Spark session needed."""
-    merges, words = _train_from_counts(
-        corpus, num_merges=64, min_pair_count=1
-    )
-    final = {"".join(sym): tuple(sym) for sym, _n in words}
-    ranks = {p: i for i, p in enumerate(merges)}
-    for word, _n in corpus:
-        enc = _encode_word(word, ranks)
-        assert enc == list(final[word])
-        assert "".join(enc) == word  # lossless
+def _non_ws(segs):
+    return F.filter(segs, lambda t: ~t.rlike("^" + WS_CLASS + "+$"))
 
 
 def test_word_counts(spark):
@@ -156,115 +27,58 @@ def test_word_counts(spark):
         [(1, "to be or"), (2, "to be")], "doc_id long, text string"
     )
     got = {
-        r["word"]: r["n"] for r in word_counts(docs).collect()
+        r["word"]: r["n"]
+        for r in docs.select(
+            F.explode(_non_ws(bpe_tokens(F.col("text")))).alias("word")
+        )
+        .groupBy("word")
+        .agg(F.count("*").alias("n"))
+        .collect()
     }
     # space-glued: "to", " be"(x2), " or", "to" -> {"to":2," be":2," or":1}
     assert got == {"to": 2, " be": 2, " or": 1}
-
-
-def test_bpe_vocab_and_ids(spark):
-    from helix_html2md_spark.operators.tokenizer import (
-        bpe_vocab, corpus_alphabet,
-    )
-
-    train = spark.createDataFrame(
-        [(1, "xy xy xy zx")], "doc_id long, text string"
-    )
-    merges = train_bpe(train, num_merges=10)   # [(x,y), (' ',xy)]
-    alphabet = corpus_alphabet(train)
-    assert alphabet == [" ", "x", "y", "z"]
-    vocab = bpe_vocab(alphabet, merges)
-    # base ids 0..3 in sorted char order, then merge pieces by rank
-    assert vocab == {" ": 0, "x": 1, "y": 2, "z": 3, "xy": 4, " xy": 5}
-    # duplicate piece strings keep the FIRST rank's id
-    assert bpe_vocab(["a", "b", "c"], [("a", "bc"), ("ab", "c")]) in (
-        {"a": 0, "b": 1, "c": 2, "abc": 3},
-    )
-    docs = spark.createDataFrame(
-        [(7, "xy zx xy"), (8, ""), (9, "q")],   # 'q' outside alphabet
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r for r in bpe_encode(docs, merges, vocab=vocab).collect()
+    n = {
+        r["doc_id"]: r["n"]
+        for r in docs.select(
+            "doc_id", bpe_token_count(F.col("text")).alias("n")
+        ).collect()
     }
-    # pieces doc7: ['xy',' ','z','x',' xy'] -> ids [4,0,3,1,5]
-    assert list(out[7]["ids"]) == [4, 0, 3, 1, 5]
-    assert out[7]["n_unk"] == 0
-    assert list(out[8]["ids"]) == [] and out[8]["n_unk"] == 0
-    assert list(out[9]["ids"]) == [-1] and out[9]["n_unk"] == 1
-    # ids align with pieces one-for-one
-    assert len(out[7]["ids"]) == len(out[7]["pieces"]) == out[7]["n_pieces"]
-    # without a vocab the schema is unchanged (no ids/n_unk columns)
-    assert bpe_encode(docs, merges).columns == [
-        "doc_id", "n_pieces", "pieces",
-    ]
+    assert n == {1: 3, 2: 2}
 
 
-def test_save_load_roundtrip_serves_identical_ids(spark, tmp_path):
-    """A tokenizer trained once and persisted must encode identically
-    when loaded in a later job — merge ORDER restored from the rank
-    column (parquet row order is not a contract), vocab ids intact."""
-    from helix_html2md_spark.operators.tokenizer import (
-        bpe_encode, bpe_vocab, corpus_alphabet, load_bpe, save_bpe,
-        train_bpe,
+def test_bpe_determinism_and_lossless(spark):
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    segs = docs.select(
+        "doc_id", "text", bpe_tokens(F.col("text")).alias("segs")
+    ).select(
+        "doc_id",
+        "text",
+        "segs",
+        _non_ws(F.col("segs")).alias("words"),
+        bpe_token_count(F.col("text")).alias("n"),
     )
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " * (1 + i % 3))
-         for i in range(30)],
-        "doc_id long, text string",
-    )
-    merges = train_bpe(docs, num_merges=48)
-    vocab = bpe_vocab(corpus_alphabet(docs), merges)
-    tok_dir = str(tmp_path / "tok")
-    save_bpe(spark, tok_dir, merges, vocab)
-    merges2, vocab2 = load_bpe(spark, tok_dir)
-    assert merges2 == merges
-    assert vocab2 == vocab
-    a = {r["doc_id"]: (list(r["pieces"]), list(r["ids"]))
-         for r in bpe_encode(docs, merges, vocab=vocab).collect()}
-    b = {r["doc_id"]: (list(r["pieces"]), list(r["ids"]))
-         for r in bpe_encode(docs, merges2, vocab=vocab2).collect()}
-    assert a == b
-    # merges-only save: vocab comes back None
-    save_bpe(spark, str(tmp_path / "tok2"), merges)
-    m3, v3 = load_bpe(spark, str(tmp_path / "tok2"))
-    assert m3 == merges and v3 is None
-
-
-def test_save_bpe_merges_only_clears_stale_vocab(spark, tmp_path):
-    """A merges-only re-save must not leave a previous save's vocab in
-    place — load would pair new ranks with an old, misaligned id
-    table (the silent id shift persistence exists to prevent)."""
-    from helix_html2md_spark.operators.tokenizer import load_bpe, save_bpe
-
-    d = str(tmp_path / "tok")
-    save_bpe(spark, d, [("a", "b")], {"a": 0, "b": 1, "ab": 2})
-    save_bpe(spark, d, [("b", "c")])  # retrained, no vocab this time
-    merges, vocab = load_bpe(spark, d)
-    assert merges == [("b", "c")]
-    assert vocab is None  # the stale v1 table must NOT come back
-
-
-def test_load_bpe_detects_mispaired_vocab(spark, tmp_path):
-    """A crash between the two artifact overwrites leaves new merges
-    next to a stale vocab; the merges fingerprint each vocab row
-    carries must make the load fail LOUDLY, never shift ids."""
-    import shutil
-
-    from helix_html2md_spark.operators.tokenizer import load_bpe, save_bpe
-
-    d1, d2 = str(tmp_path / "t1"), str(tmp_path / "t2")
-    save_bpe(spark, d1, [("a", "b")], {"a": 0, "b": 1, "ab": 2})
-    save_bpe(spark, d2, [("b", "c")], {"b": 0, "c": 1, "bc": 2})
-    # simulate the torn re-save: t1's merges updated, vocab still old
-    shutil.rmtree(f"{d1}/merges")
-    shutil.copytree(f"{d2}/merges", f"{d1}/merges")
-    import pytest
-
-    with pytest.raises(ValueError, match="inconsistent"):
-        load_bpe(spark, d1)
-    # an explicitly-empty dict collapses to None through the cycle
-    save_bpe(spark, d2, [("b", "c")], {})
-    _, vocab = load_bpe(spark, d2)
-    assert vocab is None
+    # every check runs JVM-side over EVERY document; zero rows may diverge
+    # lossless: the segments concatenate back to the text
+    assert segs.filter(
+        F.col("text").isNotNull()
+        & (F.array_join("segs", "") != F.col("text"))
+    ).count() == 0
+    # a non-whitespace pre-token carries at most one glued leading space
+    # and no other whitespace
+    assert segs.filter(
+        F.exists(
+            "words",
+            lambda t: ~t.rlike("^ ?[^ \\t\\n\\x0B\\f\\r]+$"),
+        )
+    ).count() == 0
+    # bpe_token_count is exactly the non-whitespace segment count
+    assert segs.filter(F.size("words") != F.col("n")).count() == 0
+    # deterministic across evaluations
+    a = segs.select("doc_id", "n", F.md5(F.array_join("words", "|")))
+    assert sorted(a.collect()) == sorted(a.collect())
+    # pre-tokens group characters: fewer tokens than non-space chars
+    n_tokens, n_chars = segs.agg(
+        F.sum("n"),
+        F.sum(F.length(F.regexp_replace("text", WS_CLASS + "+", ""))),
+    ).collect()[0]
+    assert 0 < n_tokens < n_chars
