@@ -52,7 +52,7 @@ def _spread(df: DataFrame) -> DataFrame:
 
     The driver tables are single-file, single-row-group parquet, so the
     scan stage is one task and every per-row-heavy projection (langid,
-    minhash, gopher grams...) runs on one core of local[32] (guide
+    minhash, window hashes...) runs on one core of local[32] (guide
     §2.5: input skew — one unsplittable file; repartition immediately
     after the read).  The repartition is pinned (explicit N) so AQE's
     byte-based coalescing cannot fold the tiny-but-compute-heavy rows
@@ -86,8 +86,7 @@ def _docs(spark, sf_dir, spread: bool = True):
     """Documents table; ``spread=False`` for queries whose per-row work
     is trivial (one md5 / one string compare) — for those the pinned
     repartition is pure overhead (same-weather A/B: exact_dedup 0.75
-    -> 1.31 s, corpus_mix 0.41 -> 0.66 s with the fan-out; both back
-    at parity without it)."""
+    -> 1.31 s with the fan-out, back at parity without it)."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return _spread(df) if spread else df
 
@@ -282,46 +281,7 @@ def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
-def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed corpus-cleaning pipeline: quality gates + exact dedup."""
-    from helix_html2md_spark.operators.pipeline import clean_corpus
-
-    return clean_corpus(_docs(spark, sf_dir)).orderBy("doc_id")
-
-
 _DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
-
-
-def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source mixture sampling (operators/corpus.py::mix_corpus):
-    weighted keep rates per source via the stateless md5-prefix
-    threshold — zero shuffle for the filter, one aggregation for the
-    per-source summary.  Weights exercise the full range: keep-all
-    (256, needs the 'zz' sentinel — '100' loses the 2-char compare),
-    half, quarter, drop-all (0), and the 32/256 default."""
-    from helix_html2md_spark.operators.corpus import mix_corpus
-
-    mixed = mix_corpus(
-        _docs(spark, sf_dir, spread=False), _MIX_WEIGHTS,
-        default=_MIX_DEFAULT,
-    )
-    return (
-        mixed.groupBy("source")
-        .agg(
-            F.count("*").alias("n_kept"),
-            F.sum("n_chars").alias("chars_kept"),
-        )
-        .orderBy("source")
-    )
-
-
-# corpus_mix weights — module-level so the DuckDB oracle derives its CASE
-# thresholds from the SAME dict and the SAME threshold encoder as the
-# Spark query (hand-transcribed hex literals drift)
-from helix_html2md_spark.operators.corpus import _thr as _corpus_thr
-
-_MIX_WEIGHTS = {"src0": 256, "src1": 128, "src2": 64, "src3": 0}
-_MIX_DEFAULT = 32
 
 
 def _span_md5():
@@ -408,40 +368,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(
         _docs(spark, sf_dir), chunk_tokens=512, overlap=64
     ).orderBy("doc_id", "chunk_idx")
-
-
-def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-5 TF-IDF terms with an integer-quantized idf
-    (floor(1000*N/df)) — float ln() is not bit-portable across engines,
-    so the cross-engine contract ranks on exact integer arithmetic.
-    One explode + combined count, term-keyed df join, per-doc window
-    top-k (operators/corpus.py)."""
-    from helix_html2md_spark.operators.corpus import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir), k=5).orderBy(
-        "doc_id", "rank"
-    )
-
-
-def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/MassiveText document-quality verdicts (Rae et al. 2021
-    Table A1): token count, mean token length, distinct stopwords,
-    top-2-gram and duplicated-5-gram character coverage — every metric
-    integer (milli / parts-per-million), so the keep decision and the
-    first-failed-rule reason are bit-portable across engines
-    (operators/corpus.py gopher_filter).  ``keep`` is emitted as int —
-    the driver's value canon sorts raw pandas objects and boolean
-    columns are the kind of cross-engine dtype hazard the contract
-    bans alongside raw arrays."""
-    from helix_html2md_spark.operators.corpus import gopher_filter
-
-    out = gopher_filter(_docs(spark, sf_dir))
-    sel = out.select(
-        "doc_id", "n_tokens", "mean_len_milli", "n_stop_distinct",
-        "top_gram_ppm", "dup_gram_ppm",
-        F.col("keep").cast("int").alias("keep_flag"), "reason",
-    )
-    return _fence(sel).orderBy("doc_id")
 
 
 def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,7 +477,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     queries left with their operators, as did the seven embedding
     queries (embedding stats, cosine top-k, embedding near-dup, LSH
     bucketed top-k, IVF-Flat and IVF-SQ index top-k, int8
-    quantization) with the similarity operators.  Ordering is
+    quantization) with the similarity operators and the four
+    corpus-curation queries (clean-corpus gates, per-source mixture
+    sampling, TF-IDF top terms, Gopher quality verdicts) with the
+    corpus and pipeline operators.  Ordering is
     cheapest-first-ish with the round-4-missing four up front,
     streaming e2e last, so any budget cutoff eats the most-proven tail,
     not fresh surfaces."""
@@ -559,7 +488,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_spans": q_extract_spans,
         "dup_components": q_dup_components,
         "bpe_token_stats": q_bpe_token_stats,
-        "clean_corpus": q_clean_corpus,
         "exact_dedup": q_exact_dedup,
         "token_stats": q_token_stats,
         "quality": q_quality,
@@ -567,9 +495,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jaccard_adjacent": q_jaccard_adjacent,
         "shingle_minhash": q_shingle_minhash,
         "minhash_dup_groups": q_minhash_dup_groups,
-        "corpus_mix": q_corpus_mix,
-        "gopher_filter": q_gopher_filter,
-        "tfidf_terms": q_tfidf_terms,
         "pdf_extract": q_pdf_extract,
         "boilerplate": q_boilerplate,
         "extract_fallback": q_extract_fallback,
@@ -699,106 +624,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{_DATA_DIR}/golden_fallback.parquet')
             ORDER BY doc_id
         """,
-        "tfidf_terms": f"""
-            WITH tf AS (
-              SELECT doc_id, term, count(*) AS tf
-              FROM (SELECT doc_id, unnest({_TOKENS}) AS term
-                    FROM documents)
-              GROUP BY doc_id, term),
-            d AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-            n AS (SELECT count(*) AS n FROM documents),
-            s AS (
-              SELECT tf.doc_id, tf.term, tf.tf, d.df,
-                     cast(tf.tf * ((1000 * n.n) // d.df)
-                          AS bigint) AS score
-              FROM tf JOIN d USING (term) CROSS JOIN n),
-            r AS (
-              SELECT s.*, cast(row_number() OVER (
-                       PARTITION BY doc_id
-                       ORDER BY score DESC, term) AS int) AS rank
-              FROM s)
-            SELECT doc_id, term, tf, df, score, rank
-            FROM r WHERE rank <= 5 ORDER BY doc_id, rank
-        """,
-        # thresholds derive from the SAME weight dict + _thr encoder the
-        # Spark query uses (hand-transcribed hex literals drift)
-        "corpus_mix": f"""
-            WITH k AS (
-              SELECT source, n_chars FROM documents
-              WHERE substr(md5(cast(doc_id AS varchar)), 1, 2) <
-                    CASE source
-                      {' '.join(f"WHEN '{s}' THEN '{_corpus_thr(n)}'" for s, n in sorted(_MIX_WEIGHTS.items()))}
-                      ELSE '{_corpus_thr(_MIX_DEFAULT)}' END)
-            SELECT source, count(*) AS n_kept,
-                   cast(sum(n_chars) AS bigint) AS chars_kept
-            FROM k GROUP BY source ORDER BY source
-        """,
-        "gopher_filter": f"""
-            WITH d AS (
-              -- NULL text coalesces ONCE, mirroring _token_base: a
-              -- null-text doc must be judged too_few_tokens with zero
-              -- metrics, not fall through NULL CASE arms
-              SELECT doc_id, coalesce(text, '') AS text FROM documents),
-            t AS (
-              SELECT doc_id, {_TOKENS} AS toks, length(text) AS n_chars
-              FROM d),
-            g2 AS (
-              SELECT doc_id, unnest(CASE WHEN len(toks) >= 2
-                THEN list_transform(range(1, len(toks)),
-                       i -> array_to_string(toks[i:i+1], ' '))
-                ELSE []::VARCHAR[] END) AS gram FROM t),
-            c2 AS (SELECT doc_id, gram, count(*) AS cnt
-                   FROM g2 GROUP BY 1, 2),
-            a2 AS (SELECT doc_id,
-                     max(struct_pack(cnt := cnt,
-                                     cov := cnt * length(gram))) AS top_s
-                   FROM c2 GROUP BY 1),
-            g5 AS (
-              SELECT doc_id, unnest(CASE WHEN len(toks) >= 5
-                THEN list_transform(range(1, len(toks) - 3),
-                       i -> array_to_string(toks[i:i+4], ' '))
-                ELSE []::VARCHAR[] END) AS gram FROM t),
-            c5 AS (SELECT doc_id, gram, count(*) AS cnt
-                   FROM g5 GROUP BY 1, 2),
-            a5 AS (SELECT doc_id,
-                     cast(sum(CASE WHEN cnt >= 2 THEN cnt * length(gram)
-                              ELSE 0 END) AS bigint) AS dup
-                   FROM c5 GROUP BY 1),
-            m AS (
-              SELECT t.doc_id,
-                len(t.toks) AS n_tokens,
-                cast((1000 * coalesce(list_sum(
-                   list_transform(t.toks, x -> length(x))), 0))
-                  // greatest(len(t.toks), 1) AS bigint)
-                  AS mean_len_milli,
-                len(list_distinct(list_filter(t.toks,
-                   x -> list_contains({_STOP}, x)))) AS n_stop_distinct,
-                least(1000000,
-                  (1000000 * coalesce((a2.top_s).cov, 0))
-                    // greatest(t.n_chars, 1)) AS top_gram_ppm,
-                least(1000000,
-                  (1000000 * coalesce(a5.dup, 0))
-                    // greatest(t.n_chars, 1)) AS dup_gram_ppm
-              FROM t
-              LEFT JOIN a2 USING (doc_id) LEFT JOIN a5 USING (doc_id)),
-            v AS (
-              SELECT *,
-                CASE
-                  WHEN n_tokens < 50 THEN 'too_few_tokens'
-                  WHEN n_tokens > 100000 THEN 'too_many_tokens'
-                  WHEN mean_len_milli < 3000 OR mean_len_milli > 10000
-                    THEN 'mean_len_out_of_range'
-                  WHEN n_stop_distinct < 2 THEN 'too_few_stopwords'
-                  WHEN top_gram_ppm > 200000 THEN 'top_ngram_repetition'
-                  WHEN dup_gram_ppm > 150000 THEN 'dup_ngram_repetition'
-                  ELSE '' END AS reason
-              FROM m)
-            SELECT doc_id, n_tokens, mean_len_milli, n_stop_distinct,
-                   top_gram_ppm, dup_gram_ppm,
-                   CASE WHEN reason = '' THEN 1 ELSE 0 END AS keep_flag,
-                   reason
-            FROM v ORDER BY doc_id
-        """,
         "dedup_segments": f"""
             WITH t AS (
               SELECT doc_id, {_TOKENS} AS toks FROM documents),
@@ -877,7 +702,6 @@ def oracle_sql() -> dict[str, str]:
         "neardup_verified": _neardup_verified_oracle(),
         "dup_components": _dup_components_oracle(),
         "bpe_token_stats": _bpe_oracle(),
-        "clean_corpus": _clean_corpus_oracle(),
         "stream_extract": f"""
             SELECT doc_id, status, md_md5
             FROM read_parquet('{_GOLDEN_EXTRACT}')
@@ -1096,31 +920,6 @@ def _bpe_oracle() -> str:
                         list_aggregate(nonws, 'string_agg', '|'), ''))
                END AS stream_md5
         FROM f ORDER BY doc_id
-    """
-
-
-def _clean_corpus_oracle() -> str:
-    return f"""
-        WITH f AS (
-          SELECT doc_id,
-                 length({_TOKENS}) AS n_tokens,
-                 round(list_sum(list_transform({_TOKENS}, x -> length(x)))
-                       / greatest(length({_TOKENS}), 1), 6) AS mean_token_len,
-                 round(length(list_distinct({_TOKENS}))
-                       / greatest(length({_TOKENS}), 1), 6) AS unique_ratio,
-                 round(length(list_filter({_TOKENS}, x -> list_contains({_STOP}, x)))
-                       / greatest(length({_TOKENS}), 1), 6) AS stopword_ratio,
-                 md5(text) AS content_hash
-          FROM documents)
-        SELECT doc_id, n_tokens, mean_token_len, unique_ratio,
-               stopword_ratio, content_hash
-        FROM f
-        WHERE n_tokens >= 10 AND n_tokens <= 100000
-          AND mean_token_len <= 12.0
-          AND unique_ratio >= 0.3
-          AND stopword_ratio >= 0.01
-        QUALIFY row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) = 1
-        ORDER BY doc_id
     """
 
 

@@ -5,8 +5,8 @@ Runs the headline suite on ``local[$SPARK_GRAFT_CPUS]`` against
 line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
 Headline = HTML->Markdown span extraction over the deterministic synthetic
-interleaved corpus (docs scaled by sf: sf * 100_000) + the dedup /
-corpus / text battery over the driver tables.
+interleaved corpus (docs scaled by sf: sf * 100_000) + the dedup / text
+battery over the ``$SPARK_GRAFT_SF_DIR`` tables.
 
 North-rule scaling evidence (BASELINE.json, the sandbox stand-in for
 N vs 4N executors): the DEFAULT run embeds an adjacent local[2]-vs-

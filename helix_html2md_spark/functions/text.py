@@ -1,5 +1,7 @@
 """Text-analysis functions for the large-scale training-data pipeline:
-token counting, document fingerprinting, quality scoring, language-ID.
+token counting, n-gram windows, document fingerprinting, quality
+scoring and BPE-style pre-tokenization (language identification lives
+in functions/langid.py).
 
 All JVM-side (pyspark.sql.functions only — no Python UDFs), so they stay
 inside whole-stage codegen and are SQL-oracle-checkable.
@@ -49,8 +51,7 @@ def char_count(col) -> Column:
 def token_ngrams(toks_col, n: int) -> Column:
     """Token n-grams over a TOKEN-ARRAY column, as space-joined strings.
 
-    The one shared windower (corpus gram coverage and dedup window
-    hashing both build on it — one guard to maintain, not two).
+    The one shared windower (dedup window hashing builds on it).
     Guarded: ``sequence(0, size-n)`` DESCENDS when ``size < n`` (Spark
     steps -1 toward a smaller stop), fabricating negative slice
     indices — a short document must yield an empty gram array
@@ -80,9 +81,8 @@ def _stopword_count_t(toks) -> Column:
 
 
 # the three ratio formulas below are transcribed into SQL in the DuckDB
-# oracles AND consumed by two operators (quality_features here,
-# operators/pipeline.py::clean_corpus) — ONE Spark-side transcription
-# each, so the copies can never diverge
+# quality oracle; quality_features applies them to one shared token
+# array
 
 
 def _mean_token_len_t(toks) -> Column:
@@ -95,20 +95,10 @@ def _mean_token_len_t(toks) -> Column:
     )
 
 
-def mean_token_len(col) -> Column:
-    """Mean token length over whitespace tokens, rounded to 6dp."""
-    return _mean_token_len_t(tokens(col))
-
-
 def _stopword_ratio_t(toks) -> Column:
     return F.round(
         _stopword_count_t(toks) / F.greatest(F.size(toks), F.lit(1)), 6
     )
-
-
-def stopword_ratio(col) -> Column:
-    """Stopword-token share, rounded to 6dp."""
-    return _stopword_ratio_t(tokens(col))
 
 
 def _unique_ratio_t(toks) -> Column:
@@ -119,21 +109,15 @@ def _unique_ratio_t(toks) -> Column:
     )
 
 
-def unique_ratio(col) -> Column:
-    """Distinct-token share (vocabulary diversity), rounded to 6dp."""
-    return _unique_ratio_t(tokens(col))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic quality features: token count, mean token length,
     stopword ratio, unique-token ratio.
 
     Tokenizes ONCE: the features all read a materialized ``_toks``
-    column through the array-based ``_t`` internals.  The per-helper
-    text-col form inlines a separate regexp split per feature — seven
-    full tokenizations per row on the hot path (CollapseProject leaves
-    a multiply-referenced non-cheap projection alone, so the shared
-    column genuinely computes once)."""
+    column through the array-based ``_t`` internals, where tokenizing
+    per feature would inline a separate regexp split for each
+    (CollapseProject leaves a multiply-referenced non-cheap projection
+    alone, so the shared column genuinely computes once)."""
     c = F.col(text_col)
     t = F.col("_toks")
     return (
@@ -147,20 +131,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             _unique_ratio_t(t).alias("unique_ratio"),
         )
     )
-
-
-def quantized_idf(n_docs: int, df_col: str = "df"):
-    """Integer-quantized idf ``(1000 * n_docs) div df`` — the ONE home
-    of the cross-engine tfidf quantization (corpus.tfidf_top_terms calls
-    it and the DuckDB oracle mirrors it, so the "same integer-exact idf"
-    contract can't drift).  n_docs is cast to
-    BIGINT inside the expression: Spark parses a bare 3_000_000
-    literal as INT and ``1000 * INT`` overflows int32 at ~2.1M docs
-    (ANSI throws, legacy wraps negative) — the 100 TB corpus this
-    engine targets is six orders of magnitude past that."""
-    if n_docs < 0:
-        raise ValueError("n_docs must be >= 0")
-    return F.expr(f"(1000 * cast({int(n_docs)} as bigint)) div {df_col}")
 
 
 # BPE-style pre-tokenizer (GPT-2-ish): contraction suffixes, space-glued

@@ -1,16 +1,14 @@
 """Build a null-text-hardened twin of a testdata dir for oracle sims.
 
-Copies the documents, embeddings, and events tables with appended
-hostile rows — NULL/empty/whitespace-only text, NULL/zero-norm/
-wrong-dim vectors, NULL ts/user/type/value events (the classes that
-historically diverged between Spark's F.when/coalesce contracts and
-bare SQL CASE arms) — and symlinks the rest.  Run the full sim:
+Copies the documents table with appended hostile rows — NULL, empty
+and whitespace-only text, the classes that historically diverged
+between Spark's F.when/coalesce contracts and bare SQL CASE arms.
+Every query in __spark_entry__.queries() reads only documents.parquet
+or the in-repo parquets under data/, so no other table is copied.  Run
+the full sim:
 
     python scratch/nulltext_corpus.py /root/testdata/sf0.001
     python scratch/check_oracles.py /tmp/sf_nulltext
-
-Round-5 state: all 50 contract queries green against it
-(documents-only AND the full three-table hostility).
 """
 import os
 import shutil
@@ -23,11 +21,6 @@ dst = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf_nulltext"
 
 shutil.rmtree(dst, ignore_errors=True)
 os.makedirs(dst)
-for t in (
-    "region nation customer supplier part orders lineitem events "
-    "embeddings".split()
-):
-    os.symlink(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
 duckdb.connect().sql(
     f"""
     COPY (

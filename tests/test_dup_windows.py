@@ -5,7 +5,9 @@ formulation).
 Layers per the repo's oracle discipline: construction-time expectations
 (hand-computed interval unions on tiny documents), a row-for-row DuckDB
 differential at sf0.001 (all-integer output, exact equality), and plan
-shape (pure JVM, no cartesian product).
+shape (pure JVM, no cartesian product).  The short-document guard of
+functions/text.py::token_ngrams, the windower the window hashes build
+on, is pinned here too.
 """
 
 from __future__ import annotations
@@ -13,9 +15,10 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
-from helix_html2md_spark.functions.text import SQL_TOKENS
+from helix_html2md_spark.functions.text import SQL_TOKENS, token_ngrams, tokens
 from helix_html2md_spark.operators.dedup import (
     drop_dup_window_docs,
     dup_window_stats,
@@ -161,3 +164,14 @@ def test_plan_is_pure_jvm_no_cartesian(spark):
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("n", [1, 2, 5])
+def test_ngrams_short_doc_guard(spark, n):
+    """size < n must yield an empty gram array, not a descending
+    sequence with negative slice indices."""
+    df = spark.createDataFrame([("s", "only two")], ["doc_id", "text"])
+    out = df.select(
+        F.size(token_ngrams(tokens(F.col("text")), n)).alias("k")
+    ).collect()[0]["k"]
+    assert out == max(0, 2 - n + 1)

@@ -1,8 +1,7 @@
 """End-to-end training-data pipeline composition at sf0.001:
 
-    language gate (langid) -> quality gate (gopher) ->
-    exact-substring window dedup -> benchmark decontamination ->
-    sequence packing.
+    language gate (langid) -> exact-substring window dedup ->
+    benchmark decontamination -> sequence packing.
 
 Each stage is individually oracled elsewhere; this test pins that the
 stages COMPOSE — schemas line up, every stage's monotone-shrink
@@ -14,8 +13,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
 from helix_html2md_spark.functions.langid import filter_language
-from helix_html2md_spark.operators.corpus import gopher_filter
+from helix_html2md_spark.functions.text import token_count
 from helix_html2md_spark.operators.dedup import (
     decontaminate, drop_dup_window_docs, release_persisted,
 )
@@ -42,49 +43,47 @@ def test_full_training_pipeline(spark):
         # 0. language gate: monolingual corpus — keep en (plus 'und'
         # for marker-less soup docs the later gates judge on merit).
         # localCheckpoint = the macro-stage boundary a real pipeline
-        # puts here anyway: four more stages compose on top, and
+        # puts here anyway: three more stages compose on top, and
         # without truncating the lineage the accumulated plan TEXT
         # (rendered by AQE on every update) grows past the driver heap
         docs = filter_language(pool, keep=("en", "und")).localCheckpoint()
         n_lang = docs.count()
         assert n_lang == n0 - 2  # exactly the salted foreign docs drop
 
-        # 1. quality gate
-        verdicts = gopher_filter(docs)
-        kept_ids = verdicts.filter("keep").select("doc_id")
-        stage1 = docs.join(kept_ids, "doc_id", "left_semi")
+        # 1. exact-substring window dedup (w=20, drop heavy overlap)
+        stage1 = drop_dup_window_docs(docs, window=20, max_dup_ppm=500_000)
         n1 = stage1.count()
         assert 0 < n1 <= n_lang
 
-        # 2. exact-substring window dedup (w=20, drop heavy overlap)
-        stage2 = drop_dup_window_docs(stage1, window=20, max_dup_ppm=500_000)
-        n2 = stage2.count()
-        assert 0 < n2 <= n1
-
-        # 3. decontaminate against a "benchmark" cut from held-out docs
+        # 2. decontaminate against a "benchmark" cut from held-out docs
         bench = docs.filter("doc_id >= 490").selectExpr(
             "doc_id", "substr(text, 1, 120) AS text"
+        )
+        # a held-out doc shorter than the 13-gram window cannot collide
+        # and is kept (decontaminate's contract); doc 490 has 10 tokens
+        collidable = (F.col("doc_id") >= 490) & (
+            token_count(F.col("text")) >= 13
         )
         # precondition: contaminated docs actually reached this stage
         # (otherwise the zero-survivors check below passes vacuously
         # even when decontaminate is a no-op)
-        assert stage2.filter("doc_id >= 490").count() > 0
-        stage3 = decontaminate(stage2, bench, n=13)
-        n3 = stage3.count()
-        assert 0 < n3 <= n2
-        # the self-contaminated held-out docs that survived stages 1-2
+        assert stage1.filter(collidable).count() > 0
+        stage2 = decontaminate(stage1, bench, n=13)
+        n2 = stage2.count()
+        assert 0 < n2 <= n1
+        # the self-contaminated held-out docs that survived stage 1
         # must be gone now
-        assert stage3.filter("doc_id >= 490").count() == 0
+        assert stage2.filter(collidable).count() == 0
 
-        # 4. pack into 512-token sequences (whitespace token budget,
+        # 3. pack into 512-token sequences (whitespace token budget,
         # pack_sequences' own unit)
-        packed = pack_sequences(stage3, seq_len=512)
+        packed = pack_sequences(stage2, seq_len=512)
         rows = packed.select(
             "doc_id", "pack_id", "offset_in_pack"
         ).collect()  # materialize BEFORE release (lifetime contract)
-        assert len(rows) == n3
+        assert len(rows) == n2
         assert {r["doc_id"] for r in rows} == {
-            r["doc_id"] for r in stage3.select("doc_id").collect()
+            r["doc_id"] for r in stage2.select("doc_id").collect()
         }
         assert all(
             0 <= r["offset_in_pack"] < 512 and r["pack_id"] >= 0

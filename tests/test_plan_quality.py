@@ -34,7 +34,7 @@ _MAP_IN_PYTHON_OK = {
 
 
 def test_battery_queries_stay_jvm_side(spark):
-    """No Python UDFs in the dedup/corpus/text battery — everything
+    """No Python UDFs in the dedup/text battery — everything
     whole-stage-codegen-able.  Grouped Python (applyInPandas →
     FlatMapGroupsInPandas: whole groups cross Arrow) and mapInPandas are
     banned for EVERY query, exempted or not — the exempted queries' one

@@ -123,24 +123,6 @@ def test_bpe_tokens_lossless(spark, docs):
     assert segs == ["it", "'s", " 42", " foo", "-", "bar", "!"]
 
 
-def test_clean_corpus_gates_and_dedup(spark):
-    from helix_html2md_spark.operators.pipeline import clean_corpus
-
-    good = "the cat sat on the mat and it was a good day in the sun"
-    rows = [
-        (1, good),                      # keeper
-        (2, good),                      # exact dup of 1 -> dropped
-        (3, "short text"),              # too few tokens
-        (4, " ".join(["uniqueword"] * 40)),  # unique_ratio too low, no stopwords
-        (5, good + " extra words of the same flavor to stay distinct"),
-    ]
-    docs = spark.createDataFrame(
-        [{"doc_id": i, "text": t} for i, t in rows]
-    )
-    kept = sorted(r["doc_id"] for r in clean_corpus(docs).collect())
-    assert kept == [1, 5]
-
-
 def test_quality_features(spark, docs):
     from helix_html2md_spark.functions.text import quality_features
 
